@@ -133,7 +133,9 @@ def test_incremental_agg_crash_before_swap_recovers(spark, tmp_path):
     b1 = _env(spark, [("insert", 1, {"g": "a", "v": "1"}, None, None)])
     incremental_agg_apply(spark, b1, state, "g", "v")
     # simulate a crash that left a stale staging dir behind
-    os.makedirs(state + "._staging", exist_ok=True)
+    from wing_binlog_go_spark.streaming.maintenance import staging_path
+
+    os.makedirs(staging_path(state), exist_ok=True)
     b2 = _env(spark, [("insert", 2, {"g": "a", "v": "2"}, None, None)])
     incremental_agg_apply(spark, b2, state, "g", "v")
     assert _state(spark, state) == {"a": (3.0, 2)}

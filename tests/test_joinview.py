@@ -157,7 +157,9 @@ def test_joinview_crash_between_child_swaps_reconverges(spark, tmp_path):
     )
     assert joinview_high_water(state) == 2  # mark did NOT advance
     # plus a stale staging dir from the crash
-    os.makedirs(os.path.join(state, "view._staging"), exist_ok=True)
+    from wing_binlog_go_spark.streaming.maintenance import staging_path
+
+    os.makedirs(staging_path(os.path.join(state, "view")), exist_ok=True)
 
     _apply(spark, state, b2)  # at-least-once redelivery
     assert _pairs(spark, state) == {("10", "1"), ("11", "1")}
@@ -863,3 +865,19 @@ def test_mor_apply_never_rewrites_base(spark, tmp_path):
     pairs = _pairs_m(spark, state)
     assert ("105", "6") in pairs and ("105", "5") not in pairs
     assert ("104", "4") in pairs
+
+
+def test_mor_log_listing_sweeps_entry_staging_debris(tmp_path):
+    """A crash mid log-entry publish leaves the entry's stage (at
+    ``maintenance.staging_path``) behind: listing the log removes it and
+    never reports it as an entry."""
+    from wing_binlog_go_spark.streaming.joinview import _mor_dirs, _mor_entries
+    from wing_binlog_go_spark.streaming.maintenance import staging_path
+
+    state = str(tmp_path / "mor")
+    _, log_dir = _mor_dirs(state)
+    os.makedirs(os.path.join(log_dir, "e00000001"))
+    debris = staging_path(os.path.join(log_dir, "e00000002"))
+    os.makedirs(debris)
+    assert [seq for seq, _ in _mor_entries(state)] == [1]
+    assert not os.path.exists(debris)

@@ -1609,3 +1609,154 @@ def test_sketch_writers_single_probe_action_per_batch(spark, tmp_path, monkeypat
         ) == ["bkey=1"], name
     assert {(r.j, r.col) for r in read_cms_sketch(
         spark, str(tmp_path / "cms")).collect()}  # readable
+
+
+# ---------------------------------------------------------------------------
+# the commit primitives (rewrite_dir / write_json) and where they may live
+# ---------------------------------------------------------------------------
+
+
+def test_rewrite_dir_failed_write_keeps_old_table_then_recovers(spark, tmp_path):
+    """A write that raises mid-rewrite leaves the old table readable and
+    its half-written stage as debris; the next rewrite succeeds over it
+    and lands its meta next to the data without Spark reading it."""
+    import json
+    import os
+
+    import pytest
+
+    from wing_binlog_go_spark.streaming.maintenance import (
+        rewrite_dir,
+        staging_path,
+    )
+
+    path = str(tmp_path / "t")
+    rewrite_dir(path, spark.createDataFrame([(1,), (2,)], "k long"))
+
+    def torn_write(staged):
+        spark.createDataFrame([(9,)], "k long").write.parquet(staged)
+        raise RuntimeError("simulated crash mid-rewrite")
+
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        rewrite_dir(path, torn_write)
+    assert os.path.isdir(staging_path(path))  # the debris is really there
+    assert sorted(r.k for r in spark.read.parquet(path).collect()) == [1, 2]
+
+    rewrite_dir(
+        path, spark.createDataFrame([(3,)], "k long"), {"_m.json": {"mark": 3}}
+    )
+    assert not os.path.exists(staging_path(path))
+    assert [r.k for r in spark.read.parquet(path).collect()] == [3]
+    with open(os.path.join(path, "_m.json")) as f:
+        assert json.load(f) == {"mark": 3}
+
+
+def test_write_json_failed_dump_keeps_previous_file(tmp_path):
+    """A JSON write that raises mid-dump (here: an unserializable value
+    after some keys were already emitted) leaves the previous file
+    intact; the next write replaces it."""
+    import json
+
+    import pytest
+
+    from wing_binlog_go_spark.streaming.maintenance import write_json
+
+    path = str(tmp_path / "mark.json")
+    write_json(path, {"next": 5})
+    with pytest.raises(TypeError):
+        write_json(path, {"next": 7, "bad": object()})
+    with open(path) as f:
+        assert json.load(f) == {"next": 5}
+    write_json(path, {"next": 8})
+    with open(path) as f:
+        assert json.load(f) == {"next": 8}
+
+
+def test_rewrite_dir_of_one_bucket_adds_no_partition(spark, tmp_path):
+    """Rewriting one ``bucket=N`` dir of a partitioned table stages to a
+    hidden sibling: the parent reads with the same row count and the
+    same partitions both while the stage exists and after the swap."""
+    import os
+
+    from wing_binlog_go_spark.streaming.maintenance import rewrite_dir
+
+    parent = str(tmp_path / "tbl")
+    spark.createDataFrame(
+        [(i, i % 4) for i in range(40)], "k long, bucket int"
+    ).write.partitionBy("bucket").parquet(parent)
+
+    def shape():
+        df = spark.read.parquet(parent)
+        buckets = df.select("bucket").distinct().collect()
+        return df.count(), sorted(r.bucket for r in buckets)
+
+    before = shape()
+    assert before == (40, [0, 1, 2, 3])
+    seen = {}
+    bdir = os.path.join(parent, "bucket=1")
+    content = spark.read.parquet(bdir).localCheckpoint(eager=True)
+
+    def write(staged):
+        content.coalesce(1).write.parquet(staged)
+        seen["mid"] = shape()  # the full stage is on disk right now
+
+    rewrite_dir(bdir, write)
+    assert seen["mid"] == before
+    assert shape() == before
+
+
+def test_commit_protocol_is_called_only_from_maintenance():
+    """``swap_dir``, ``os.fsync`` and ``os.replace`` are called only in
+    ``streaming/maintenance.py``: every other module commits through its
+    primitives. The lease, service-registry and append-only binlog
+    bridge files keep their own file protocols."""
+    import ast
+    import pathlib
+
+    import wing_binlog_go_spark
+
+    root = pathlib.Path(wing_binlog_go_spark.__file__).parent
+    allowed = {
+        "streaming/leader.py",
+        "streaming/discovery.py",
+        "sources/mysql_bridge.py",
+    }
+
+    def commit_calls(tree):
+        os_names, fn_names = set(), {"swap_dir"}
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Import):
+                os_names |= {a.asname or a.name for a in node.names if a.name == "os"}
+            elif isinstance(node, ast.ImportFrom) and node.module == "os":
+                fn_names |= {
+                    a.asname or a.name
+                    for a in node.names
+                    if a.name in ("fsync", "replace")
+                }
+        hits = []
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            if isinstance(f, ast.Name) and f.id in fn_names:
+                hits.append((node.lineno, f.id))
+            elif isinstance(f, ast.Attribute) and (
+                f.attr == "swap_dir"
+                or (
+                    f.attr in ("fsync", "replace")
+                    and isinstance(f.value, ast.Name)
+                    and f.value.id in os_names
+                )
+            ):
+                hits.append((node.lineno, f.attr))
+        return hits
+
+    offenders = {}
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        hits = commit_calls(ast.parse(path.read_text()))
+        if rel == "streaming/maintenance.py":
+            assert hits, "the detector must see the primitives' own calls"
+        elif hits and rel not in allowed:
+            offenders[rel] = hits
+    assert offenders == {}

@@ -214,18 +214,12 @@ def score_logreg(features: DataFrame, w: list[float]) -> DataFrame:
 
 
 def save_logreg(w: list[float], path: str) -> None:
-    """Persist a trained model (atomic rename — the file's presence is
-    the commit, so a crashed save never leaves a half-written model
-    for the streaming scorer to load)."""
-    import json as _json
-    import os as _os
+    """Persist a trained model (``maintenance.write_json`` — the file's
+    presence is the commit, so a crashed save never leaves a
+    half-written model for the streaming scorer to load)."""
+    from wing_binlog_go_spark.streaming.maintenance import write_json
 
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        _json.dump({"dim": len(w), "weights": w}, f)
-        f.flush()
-        _os.fsync(f.fileno())
-    _os.replace(tmp, path)
+    write_json(path, {"dim": len(w), "weights": w})
 
 
 def load_logreg(path: str) -> tuple[list[float], int]:

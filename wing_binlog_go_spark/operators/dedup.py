@@ -431,8 +431,8 @@ def dedup_corpus_delete(
     delete path ``dedup_corpus_writer`` refuses online: a dropped
     retraction leaves the doc's text in the curated corpus AND its
     signature suppressing future near-duplicates. The store is one flat
-    parquet table, so retraction is a staged rewrite minus the ids +
-    atomic ``swap_dir`` (``recover_swap`` first — an interrupted
+    parquet table, so retraction is one ``rewrite_dir`` minus the ids
+    (``recover_swap`` first — an interrupted
     previous delete rolls forward; ``incremental_dedup_apply`` runs the
     same probe, so the stream self-heals too). Idempotent.
 
@@ -444,7 +444,7 @@ def dedup_corpus_delete(
 
     from wing_binlog_go_spark.streaming.maintenance import (
         recover_swap,
-        swap_dir,
+        rewrite_dir,
     )
 
     recover_swap(store_dir)
@@ -461,11 +461,7 @@ def dedup_corpus_delete(
     )
     if n == 0:
         return {"deleted_ids": 0}
-    staged = store_dir.rstrip("/") + "._staging"
-    store.join(ids_df, id_col, "left_anti").write.mode("overwrite").parquet(
-        staged
-    )
-    swap_dir(staged, store_dir)
+    rewrite_dir(store_dir, store.join(ids_df, id_col, "left_anti"))
     spark.catalog.refreshByPath(store_dir)  # swap bypasses the listing cache
     return {"deleted_ids": n}
 
@@ -2641,7 +2637,7 @@ def containment_corpus_delete(
 ) -> dict:
     """OFFLINE retraction for the containment corpus store — the delete
     path ``containment_corpus_writer`` refuses online. Three mutable
-    tables rewrite (staged + atomic ``swap_dir`` each): ``sets/``
+    tables rewrite (one ``rewrite_dir`` each): ``sets/``
     FIRST — it is the presence authority, so the retraction is visible
     the moment it lands — then the two posting indexes; an orphaned
     posting left by a crash between the swaps is harmless (the verify
@@ -2657,7 +2653,7 @@ def containment_corpus_delete(
 
     from wing_binlog_go_spark.streaming.maintenance import (
         recover_swap,
-        swap_dir,
+        rewrite_dir,
     )
 
     sets_dir = _os.path.join(store_dir, "sets")
@@ -2687,11 +2683,7 @@ def containment_corpus_delete(
         return {"deleted_ids": 0}
 
     for d in (sets_dir, els_dir, pre_dir):  # sets FIRST (see docstring)
-        staged = d.rstrip("/") + "._staging"
-        spark.read.parquet(d).join(doomed, "doc", "left_anti").write.mode(
-            "overwrite"
-        ).parquet(staged)
-        swap_dir(staged, d)
+        rewrite_dir(d, spark.read.parquet(d).join(doomed, "doc", "left_anti"))
         spark.catalog.refreshByPath(d)
     return {"deleted_ids": n}
 

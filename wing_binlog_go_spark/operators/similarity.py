@@ -478,8 +478,9 @@ def persist_pq_index(
     """Amortized path (same reasoning as the MinHash signature store):
     train + encode ONCE, reuse for every query batch until the corpus
     changes. Codes parquet + codebook JSON land under ``store_dir``."""
-    import json as _json
     import os as _os
+
+    from wing_binlog_go_spark.streaming.maintenance import write_json
 
     books = pq_train(corpus, m, n_codes, train_cap, id_col, vec_col, seed)
     pq_encode(corpus, books, id_col, vec_col).write.mode("overwrite").parquet(
@@ -488,13 +489,10 @@ def persist_pq_index(
     # codes first, codebooks LAST and atomically: the json's presence is
     # the founding commit (incremental_pq_index_apply keys on it), so a
     # crash mid-write must leave no truncated file a reader could load
-    final = _os.path.join(store_dir, "codebooks.json")
-    tmp = final + ".tmp"
-    with open(tmp, "w") as f:
-        _json.dump({"m": m, "n_codes": n_codes, "books": books.tolist()}, f)
-        f.flush()
-        _os.fsync(f.fileno())
-    _os.replace(tmp, final)
+    write_json(
+        _os.path.join(store_dir, "codebooks.json"),
+        {"m": m, "n_codes": n_codes, "books": books.tolist()},
+    )
 
 
 def incremental_pq_index_apply(
@@ -879,24 +877,23 @@ def _commit_ivfpq_store(
     n_codes: int,
 ) -> None:
     """The ONE commit path for a full (re)write of the IVF-PQ store:
-    stage the list-partitioned codes WITH the quantizers embedded as an
-    underscore file, atomic-rename swap, then refresh the store-root
-    convenience copy. A crash on either side of the swap leaves a
-    consistent (codes, quantizers) pair — (old, old) or (new, new) —
-    and the embedded copy can never be stale because it is only ever
-    written together with the codes it encodes."""
-    import json as _json
+    ``rewrite_dir`` of the list-partitioned codes WITH the quantizers
+    embedded as underscore meta, then a durable refresh of the
+    store-root convenience copy. A crash on either side of the swap
+    leaves a consistent (codes, quantizers) pair — (old, old) or
+    (new, new) — and the embedded copy can never be stale because it
+    is only ever written together with the codes it encodes."""
     import os as _os
-    import shutil as _shutil
 
-    from wing_binlog_go_spark.streaming.maintenance import recover_swap, swap_dir
+    from wing_binlog_go_spark.streaming.maintenance import (
+        recover_swap,
+        rewrite_dir,
+        write_json,
+    )
 
     codes_dir = _os.path.join(store_dir, "codes")
     _os.makedirs(store_dir, exist_ok=True)
     recover_swap(codes_dir)
-    staging = codes_dir + "._staging"
-    _shutil.rmtree(staging, ignore_errors=True)
-    coded.write.partitionBy("_list").parquet(staging)
     meta = {
         "n_centroids": n_centroids,
         "m": m,
@@ -904,11 +901,12 @@ def _commit_ivfpq_store(
         "coarse": coarse.tolist(),
         "books": books.tolist(),
     }
-    with open(_os.path.join(staging, "_quantizers.json"), "w") as f:
-        _json.dump(meta, f)
-    swap_dir(staging, codes_dir)
-    with open(_os.path.join(store_dir, "quantizers.json"), "w") as f:
-        _json.dump(meta, f)
+    rewrite_dir(
+        codes_dir,
+        lambda staged: coded.write.partitionBy("_list").parquet(staged),
+        {"_quantizers.json": meta},
+    )
+    write_json(_os.path.join(store_dir, "quantizers.json"), meta)
 
 
 def pq_index_delete(
@@ -921,18 +919,18 @@ def pq_index_delete(
     ``pq_index_writer`` refuses online: without it a deleted vector's
     codes keep answering ANN queries forever (the r8 verdict's ghost).
     The codes table is flat (not list-partitioned), so retraction is
-    one staged rewrite minus the ids + atomic ``swap_dir`` —
-    ``recover_swap`` first, so an interrupted previous delete rolls
-    forward; idempotent, so re-running after any crash converges. The
-    frozen codebooks are untouched (codes of the survivors stay valid
-    by construction). Same offline cost class as ``persist_pq_index``;
-    the list-partitioned sibling (:func:`ivfpq_index_delete`) shows the
+    one ``rewrite_dir`` minus the ids — ``recover_swap`` first, so an
+    interrupted previous delete rolls forward; idempotent, so
+    re-running after any crash converges. The frozen codebooks are
+    untouched (codes of the survivors stay valid by construction).
+    Same offline cost class as ``persist_pq_index``; the
+    list-partitioned sibling (:func:`ivfpq_index_delete`) shows the
     bounded-IO form. Returns {"deleted_ids": n}."""
     import os as _os
 
     from wing_binlog_go_spark.streaming.maintenance import (
         recover_swap,
-        swap_dir,
+        rewrite_dir,
     )
 
     codes_dir = _os.path.join(store_dir, "codes")
@@ -950,11 +948,7 @@ def pq_index_delete(
     )
     if n == 0:
         return {"deleted_ids": 0}
-    staged = codes_dir.rstrip("/") + "._staging"
-    codes.join(ids_df, id_col, "left_anti").write.mode("overwrite").parquet(
-        staged
-    )
-    swap_dir(staged, codes_dir)
+    rewrite_dir(codes_dir, codes.join(ids_df, id_col, "left_anti"))
     # the swap happened behind Spark's file-listing cache — without the
     # refresh, the session's next read of this path lists vanished files
     spark.catalog.refreshByPath(codes_dir)
@@ -1597,6 +1591,8 @@ def incremental_semantic_dedup_apply(
     import json as _json
     import os as _os
 
+    from wing_binlog_go_spark.streaming.maintenance import write_json
+
     # heal a semantic_corpus_delete interrupted mid-partition-swap
     # before probing ids (a retired-but-never-promoted cluster would
     # otherwise read as absent and its ids would re-append as fresh)
@@ -1617,11 +1613,8 @@ def incremental_semantic_dedup_apply(
     else:
         cents = train_centroids(new_docs, n_clusters, vec_col, seed)
         _os.makedirs(store_dir, exist_ok=True)
-        tmp = cents_path + ".tmp"
-        with open(tmp, "w") as f:
-            _json.dump({"n_clusters": n_clusters, "seed": seed,
-                        "centroids": cents}, f)
-        _os.replace(tmp, cents_path)  # atomic: readers see all or nothing
+        write_json(cents_path, {"n_clusters": n_clusters, "seed": seed,
+                                "centroids": cents})
 
     new_sigs = (
         assign_to_centroids(
@@ -2529,8 +2522,8 @@ def knn_graph_delete(
     maintenance job over the retracted ids, then resume the stream.
 
     Mechanics: the edge rebuild is a pure function of ``vectors/``, so
-    retraction = rewrite the vector store minus the ids (staged write +
-    atomic ``swap_dir`` — the upsert commit protocol; ``recover_swap``
+    retraction = rewrite the vector store minus the ids
+    (``maintenance.rewrite_dir``, like the upsert; ``recover_swap``
     first, so an interrupted previous delete rolls forward) and rebuild
     exactly the clusters the removed vectors lived in
     (:func:`_rebuild_knn_clusters`, the batch-named template; a cluster
@@ -2547,7 +2540,7 @@ def knn_graph_delete(
 
     from wing_binlog_go_spark.streaming.maintenance import (
         recover_swap,
-        swap_dir,
+        rewrite_dir,
     )
 
     vec_dir = _os.path.join(store_dir, "vectors")
@@ -2571,10 +2564,7 @@ def knn_graph_delete(
         return {"deleted": 0, "clusters_rebuilt": []}
     touched = [r.cluster for r in doomed.select("cluster").distinct().collect()]
 
-    remaining = vecs.join(doomed_ids, id_col, "left_anti")
-    staged = vec_dir.rstrip("/") + "._staging"
-    remaining.write.mode("overwrite").parquet(staged)
-    swap_dir(staged, vec_dir)
+    rewrite_dir(vec_dir, vecs.join(doomed_ids, id_col, "left_anti"))
     spark.catalog.refreshByPath(vec_dir)  # swap bypasses the listing cache
 
     _rebuild_knn_clusters(spark, vec_dir, edge_dir, touched, k, id_col)
@@ -3306,9 +3296,9 @@ def compact_ivfpq_index(
     The codes table already carries each full vector (`_cv`, the
     refine fetch), so compaction needs NO access to the original
     source: read ids+vectors back, train fresh, rewrite the
-    list-partitioned layout into a staging dir, then atomic-rename
-    swap (`swap_dir` — the upsert commit protocol, crash restores the
-    old index). Returns {"vectors": n, "n_lists": lists in new index}.
+    list-partitioned layout through ``_commit_ivfpq_store`` (a crash
+    restores the old index). Returns {"vectors": n, "n_lists": lists in
+    new index}.
     """
     import os as _os
 

@@ -192,16 +192,15 @@ def repair_chunks(
     ``key % n_chunks`` on BOTH sides, so the swap is exact by
     construction). Untouched chunks are carried over unmodified.
 
-    Commit is the staged-write + atomic-rename swap shared with
-    ``upsert_parquet`` (crash-safe: recovery rolls the rename forward
-    or discards the staging dir). This form rewrites the whole table
-    file-set; at 100 TB apply the bucketed-manifest treatment of
-    ``upsert_parquet_bucketed`` so only diverged buckets rewrite —
-    same protocol, chunk == bucket.
+    Commits through ``maintenance.rewrite_dir``, like
+    ``upsert_parquet``. This form rewrites the whole table file-set; at
+    100 TB use ``pipeline.repair_buckets`` so only diverged buckets
+    rewrite (``maintenance.rewrite_buckets``, chunk == bucket).
     """
-    import shutil
-
-    from wing_binlog_go_spark.streaming.maintenance import recover_swap, swap_dir
+    from wing_binlog_go_spark.streaming.maintenance import (
+        recover_swap,
+        rewrite_dir,
+    )
 
     if not diverged_chunks:
         return
@@ -209,11 +208,7 @@ def repair_chunks(
     chunk = F.col(key_col) % n_chunks
     kept = spark.read.parquet(replica_dir).filter(~chunk.isin(diverged_chunks))
     fresh = source.filter(chunk.isin(diverged_chunks))
-    merged = kept.unionByName(fresh)
-    tmp = replica_dir + "._staging"
-    shutil.rmtree(tmp, ignore_errors=True)
-    merged.write.mode("overwrite").parquet(tmp)
-    swap_dir(tmp, replica_dir)
+    rewrite_dir(replica_dir, kept.unionByName(fresh))
 
 
 # ---------------------------------------------------------------------------

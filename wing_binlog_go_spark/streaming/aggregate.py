@@ -20,9 +20,9 @@ idempotent, so the state records the max ``event_index`` applied and
 each batch first drops rows at or below it. ``event_index`` is
 deterministic under replay (derived from binlog coordinates — O10), so
 a replayed batch re-derives exactly the indexes already applied and
-contributes nothing. State commits through the same staged-swap
-protocol as compaction (`maintenance.swap_dir`): readers never observe
-a half-applied batch, and a crash between renames recovers.
+contributes nothing. State commits through `maintenance.rewrite_dir`,
+like compaction: readers never observe a half-applied batch, and a
+crash between renames recovers.
 
 Scale shape: each batch touches O(|batch| + |distinct groups|) rows —
 the delta aggregation is a partial-agg groupBy on the group key and the
@@ -41,7 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from wing_binlog_go_spark.streaming.maintenance import recover_swap, swap_dir
+from wing_binlog_go_spark.streaming.maintenance import recover_swap, rewrite_dir
 
 _META = "_agg_meta.json"
 
@@ -80,20 +80,10 @@ def _fresh_inserts(env_batch: DataFrame, state_dir: str, op_name: str, cannot: s
 
 
 def _commit_state(merged: DataFrame, state_dir: str, mx: int) -> None:
-    """Back half of the maintainer commit protocol: staged overwrite +
-    high-water meta + atomic rename swap (crash-safe on either side).
-
-    The meta fsyncs before the swap: unlike the idempotent stores, the
-    DELTA maintainers re-APPLY on replay — if a power loss persisted
-    the dir rename but not the mark's bytes, ``applied_index`` would
-    read −1 and the next batch would double-fold history."""
-    staged = state_dir.rstrip("/") + "._staging"
-    merged.write.mode("overwrite").parquet(staged)
-    with open(os.path.join(staged, _META), "w") as f:
-        json.dump({"max_event_index": int(mx)}, f)
-        f.flush()
-        os.fsync(f.fileno())
-    swap_dir(staged, state_dir)
+    """Back half of the maintainer commit protocol: the new state and
+    its high-water mark commit together through ``rewrite_dir`` (the
+    mark rides the swap as meta)."""
+    rewrite_dir(state_dir, merged, {_META: {"max_event_index": int(mx)}})
 
 
 def _grp_values(fresh: DataFrame, group_key: str, value_field: str, cast: str | None = None) -> DataFrame:

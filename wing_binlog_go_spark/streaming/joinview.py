@@ -24,9 +24,10 @@ same storage constraint as every maintainer in aggregate.py):
     state_dir/view   (_pk_l, _pk_r, jk, row_l, row_r)
     state_dir/view/_join_meta.json                 replay high-water mark
 
-Commit protocol: each child is staged-swapped individually, in the fixed
-order left → right → view, and the high-water mark rides with the VIEW
-swap — the last rename is the commit point. A crash between child swaps
+Commit protocol: each child commits through ``maintenance.rewrite_dir``
+individually, in the fixed order left → right → view, and the
+high-water mark rides with the VIEW swap as meta — the last rename is
+the commit point. A crash between child swaps
 leaves sides ahead of the mark, which is safe because every step is
 idempotent: the side merge is last-writer-wins by the replay-stable
 ``event_index`` (re-unioning the same change rows picks the same
@@ -69,7 +70,11 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from wing_binlog_go_spark.streaming.maintenance import recover_swap, swap_dir
+from wing_binlog_go_spark.streaming.maintenance import (
+    recover_swap,
+    rewrite_dir,
+    write_json,
+)
 from wing_binlog_go_spark.streaming.pipeline import (
     _collapse_lww,
     change_rows_per_pk,
@@ -127,17 +132,8 @@ def _merge_side(state: DataFrame, changes: DataFrame) -> DataFrame:
 
 
 def _swap_child(df: DataFrame, path: str, meta_mx: int | None = None) -> None:
-    staged = path.rstrip("/") + "._staging"
-    df.write.mode("overwrite").parquet(staged)
-    if meta_mx is not None:
-        # fsync before the commit rename: the dir rename can survive a
-        # power loss whose page cache still held the meta bytes, and an
-        # empty mark file would silently replay the whole history
-        with open(os.path.join(staged, _META), "w") as f:
-            json.dump({"max_event_index": int(meta_mx)}, f)
-            f.flush()
-            os.fsync(f.fileno())
-    swap_dir(staged, path)
+    meta = None if meta_mx is None else {_META: {"max_event_index": int(meta_mx)}}
+    rewrite_dir(path, df, meta)
 
 
 def incremental_joinview_apply(
@@ -181,16 +177,11 @@ def incremental_joinview_apply(
     if not l_dirty and not r_dirty:
         # batch carried only other tables' events: advance the mark
         # WITHOUT rewriting the untouched view (the scd2 idle-table
-        # lesson) — atomic file replace, fsynced like the swap path
-        view_dir_exists = os.path.exists(view_dir)
-        meta = os.path.join(view_dir, _META)
-        if view_dir_exists:
-            tmp = meta + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump({"max_event_index": int(mx)}, f)
-                f.flush()
-                os.fsync(f.fileno())
-            os.replace(tmp, meta)
+        # lesson) — a durable write_json of the mark alone
+        if os.path.exists(view_dir):
+            write_json(
+                os.path.join(view_dir, _META), {"max_event_index": int(mx)}
+            )
             return
         # no view yet: fall through and materialize the (empty) state
     if l_dirty:
@@ -359,7 +350,7 @@ def _read_bucketed(spark: SparkSession, path: str, schema: str) -> DataFrame:
 
 def joinview_bucketed_high_water(state_dir: str) -> int:
     """Bucketed layout's replay mark (root-level meta — the commit is a
-    fsynced file replace, not a dir swap). Same −1 tolerance."""
+    ``write_json``, not a dir swap). Same −1 tolerance."""
     try:
         with open(os.path.join(state_dir, _META)) as f:
             return int(json.load(f)["max_event_index"])
@@ -444,7 +435,7 @@ def incremental_joinview_apply_bucketed(
     outside the affected buckets (test-asserted by planted corrupt
     files).
 
-    Commit = the root meta's fsynced atomic replace AFTER all bucket
+    Commit = the root meta's ``write_json`` AFTER all bucket
     overwrites, in the fixed order left data → left posting → right
     data → right posting → view → mark. A crash anywhere leaves the
     OLD mark: the redelivered batch re-merges sides last-writer-wins
@@ -469,12 +460,7 @@ def incremental_joinview_apply_bucketed(
     ch_r = _side_changes(fresh, right_table, pk_right).localCheckpoint(eager=True)
 
     def commit_mark() -> None:
-        tmp = os.path.join(state_dir, _META + ".tmp")
-        with open(tmp, "w") as f:
-            json.dump({"max_event_index": int(mx)}, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, os.path.join(state_dir, _META))
+        write_json(os.path.join(state_dir, _META), {"max_event_index": int(mx)})
 
     if ch_l.isEmpty() and ch_r.isEmpty():
         commit_mark()  # other tables' events: mark only, zero table IO
@@ -876,8 +862,8 @@ def incremental_joinview_apply_mor(
     touch-sets kill the earlier copy's adds — the reader sees each
     pair once, whichever entry it came from.
 
-    Commit = the entry dir's staged rename, then the root mark's
-    fsynced replace. Convergence, not atomicity, as everywhere else.
+    Commit = the entry dir's ``rewrite_dir``, then the root mark's
+    ``write_json``. Convergence, not atomicity, as everywhere else.
     """
     base_dir, log_dir = _mor_dirs(state_dir)
     os.makedirs(log_dir, exist_ok=True)
@@ -894,12 +880,7 @@ def incremental_joinview_apply_mor(
     ch_r = _side_changes(fresh, right_table, pk_right).localCheckpoint(eager=True)
 
     def commit_mark() -> None:
-        tmp = os.path.join(state_dir, _META + ".tmp")
-        with open(tmp, "w") as f:
-            json.dump({"max_event_index": int(mx)}, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, os.path.join(state_dir, _META))
+        write_json(os.path.join(state_dir, _META), {"max_event_index": int(mx)})
 
     if ch_l.isEmpty() and ch_r.isEmpty():
         commit_mark()
@@ -1039,11 +1020,13 @@ def incremental_joinview_apply_mor(
     entries = _mor_entries(state_dir)
     seq = (entries[-1][0] + 1) if entries else _mor_compacted_through(base_dir) + 1
     entry = os.path.join(log_dir, f"e{seq:08d}")
-    staging = entry + "._staging"
-    ch_l.write.mode("overwrite").parquet(os.path.join(staging, "chl"))
-    ch_r.write.mode("overwrite").parquet(os.path.join(staging, "chr"))
-    adds.write.mode("overwrite").parquet(os.path.join(staging, "adds"))
-    os.replace(staging, entry)
+
+    def publish(staging: str) -> None:
+        ch_l.write.mode("overwrite").parquet(os.path.join(staging, "chl"))
+        ch_r.write.mode("overwrite").parquet(os.path.join(staging, "chr"))
+        adds.write.mode("overwrite").parquet(os.path.join(staging, "adds"))
+
+    rewrite_dir(entry, publish)
     commit_mark()
 
 
@@ -1114,8 +1097,8 @@ def compact_joinview_mor(
     """Fold the log into ``base/`` (the amortized COW the apply defers):
     materialize the folded sides and view, write a fresh bucketed base
     (data partitioned on pk bucket, postings on jk bucket, view on
-    ``_pk_l`` bucket) to a staging dir, swap it in — the compaction
-    marker ``_compact.json`` rides the swap — then delete the folded
+    ``_pk_l`` bucket) through ``rewrite_dir`` — the compaction marker
+    ``_compact.json`` rides the swap as meta — then delete the folded
     entries. A crash after the swap leaves stale entries the marker
     makes every reader skip (and the next apply/compaction delete);
     a crash before it leaves the old base + full log, and the next
@@ -1144,33 +1127,32 @@ def compact_joinview_mor(
         "left": folded_side("left", "chl"),
         "right": folded_side("right", "chr"),
     }
-    staging = base_dir.rstrip("/") + "._staging"
-    shutil.rmtree(staging, ignore_errors=True)
-    for which, key in (("left", key_left), ("right", key_right)):
-        side = sides[which]
-        side.withColumn("sb", _bucket_of("_pk", num_buckets)).repartition(
-            F.col("sb")
-        ).write.partitionBy("sb").parquet(os.path.join(staging, which))
-        post = (
-            side.select(
-                F.element_at("row", key).alias("jk"), F.col("_pk")
+
+    def fold(staging: str) -> None:
+        for which, key in (("left", key_left), ("right", key_right)):
+            side = sides[which]
+            side.withColumn("sb", _bucket_of("_pk", num_buckets)).repartition(
+                F.col("sb")
+            ).write.partitionBy("sb").parquet(os.path.join(staging, which))
+            post = (
+                side.select(
+                    F.element_at("row", key).alias("jk"), F.col("_pk")
+                )
+                .filter(F.col("jk").isNotNull())
+                .withColumn("jb", _bucket_of("jk", num_buckets))
             )
-            .filter(F.col("jk").isNotNull())
-            .withColumn("jb", _bucket_of("jk", num_buckets))
-        )
-        post.repartition(F.col("jb")).write.partitionBy("jb").parquet(
-            os.path.join(staging, f"{which}_jk")
-        )
-    view.withColumn("vb", _bucket_of("_pk_l", num_buckets)).repartition(
-        F.col("vb")
-    ).write.partitionBy("vb").parquet(os.path.join(staging, "view"))
-    with open(os.path.join(staging, "_compact.json"), "w") as f:
-        json.dump(
-            {"through_seq": int(through), "num_buckets": int(num_buckets)}, f
-        )
-        f.flush()
-        os.fsync(f.fileno())
-    swap_dir(staging, base_dir)
+            post.repartition(F.col("jb")).write.partitionBy("jb").parquet(
+                os.path.join(staging, f"{which}_jk")
+            )
+        view.withColumn("vb", _bucket_of("_pk_l", num_buckets)).repartition(
+            F.col("vb")
+        ).write.partitionBy("vb").parquet(os.path.join(staging, "view"))
+
+    rewrite_dir(base_dir, fold, {
+        "_compact.json": {
+            "through_seq": int(through), "num_buckets": int(num_buckets)
+        },
+    })
     for seq, path in entries:
         shutil.rmtree(path, ignore_errors=True)
 

@@ -1,23 +1,40 @@
-"""Table maintenance: small-file compaction for streaming sinks.
+"""The on-disk commit protocol, and the table maintenance jobs built on it.
 
-Streaming parquet sinks append one file per batch per partition; at a
-few seconds per micro-batch that is thousands of small files a day —
-the classic lakehouse small-file problem (SURVEY §4 notes OPTIMIZE-style
-compaction as the maintenance job at the 100 TB north star; Delta's
-OPTIMIZE is the managed equivalent).
+Every in-place rewrite in the engine — replicas, SCD2 history, aggregate
+and join-view state, dedup, ANN and search stores — commits through the
+three primitives here; no other module swaps directories, fsyncs or
+renames files over each other:
 
-``compact_parquet`` rewrites a directory into ~target_file_mb files via
-a coalesce-or-repartition chosen from the actual on-disk size, staging
-through a temp dir so readers never see a half-written table.
+- :func:`rewrite_dir` — single-directory staged rewrite: write the new
+  table to the hidden :func:`staging_path` sibling (plus optional meta
+  JSON, fsynced inside the stage), then :func:`swap_dir` it into place.
+- :func:`write_json` — durable JSON write: tmp file, fsync, atomic
+  ``os.replace``.
+- :func:`rewrite_buckets` — multi-bucket manifest commit for the
+  ``bucket=N`` layouts: stage every changed bucket, commit a manifest
+  naming them, swap each in; rolled forward by
+  :func:`recover_bucket_commit` after a crash.
+
+The maintenance jobs (compaction, z-order, sketch-store compaction) are
+ordinary callers of the same primitives. Streaming parquet sinks append
+one file per batch per partition; at a few seconds per micro-batch that
+is thousands of small files a day — the classic lakehouse small-file
+problem (SURVEY §4 notes OPTIMIZE-style compaction as the maintenance
+job at the 100 TB north star; Delta's OPTIMIZE is the managed
+equivalent).
 """
 
 from __future__ import annotations
 
+import fcntl
+import json
 import math
 import os
 import shutil
+from contextlib import contextmanager
+from typing import Callable, Iterable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def backup_path(path: str) -> str:
@@ -29,6 +46,15 @@ def backup_path(path: str) -> str:
     and read as duplicate rows by any reader that lists mid-swap."""
     d, b = os.path.split(path.rstrip("/"))
     return os.path.join(d, "." + b + "._old")
+
+
+def staging_path(path: str) -> str:
+    """Where a rewrite of ``path`` stages: a DOT-PREFIXED sibling, for
+    the same reason as :func:`backup_path` — a visible ``X._staging``
+    next to a ``bucket=N`` dir is read as a phantom partition by any
+    reader that lists the parent mid-rewrite."""
+    d, b = os.path.split(path.rstrip("/"))
+    return os.path.join(d, "." + b + "._staging")
 
 
 def swap_dir(new_dir: str, path: str) -> None:
@@ -52,6 +78,58 @@ def swap_dir(new_dir: str, path: str) -> None:
         os.rename(path, backup)
     os.rename(new_dir, path)
     shutil.rmtree(backup, ignore_errors=True)
+
+
+def write_json(path: str, payload) -> None:
+    """Durable JSON write: tmp file, fsync, atomic ``os.replace``.
+
+    The rename makes the write atomic against a process crash — readers
+    see the old file or the new one, never a truncated one. The fsync
+    BEFORE the rename makes it durable: after a power loss a
+    renamed-but-unsynced file can surface stale or empty, and every
+    file written here is a commit record whose loss is a correctness
+    bug, not lost work (a reverted event_index ``next`` hands a later
+    batch an already-used index range; a lost bucket manifest reads as
+    "crash before commit" and leaves a lasting old/new bucket mix).
+    This matches the durability of the reference's O_SYNC pos write
+    (util.go:11-57), not just its atomicity."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(payload, f)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, path)
+
+
+def rewrite_dir(
+    path: str,
+    content: "DataFrame | Callable[[str], None]",
+    meta: "dict[str, object] | None" = None,
+) -> None:
+    """Single-directory staged rewrite: the new table is written in
+    full to :func:`staging_path` (which also keeps the plan from
+    clobbering its own parquet input mid-scan), then :func:`swap_dir`
+    puts it in place. A write that raises leaves the old table
+    untouched and readable; its debris is discarded by the next
+    rewrite. Callers run :func:`recover_swap` before READING ``path``.
+
+    ``content`` is a DataFrame (written as parquet) or a callable that
+    writes the new table into the directory it is given (partitioned
+    layouts, several child tables). ``meta`` maps file names to JSON
+    payloads written INTO the stage, so they ride the same rename as
+    the data; they are fsynced before the swap because the dir rename
+    can survive a power loss whose page cache still held the meta
+    bytes — an empty replay mark would re-apply (delta maintainers) or
+    replay (join views) the whole history."""
+    staged = staging_path(path)
+    shutil.rmtree(staged, ignore_errors=True)
+    if isinstance(content, DataFrame):
+        content.write.mode("overwrite").parquet(staged)
+    else:
+        content(staged)
+    for name, payload in (meta or {}).items():
+        write_json(os.path.join(staged, name), payload)
+    swap_dir(staged, path)
 
 
 def _legacy_backup_path(path: str) -> str:
@@ -99,6 +177,147 @@ def recover_bucket_swaps(target_dir: str) -> None:
             recover_swap(os.path.join(target_dir, name))
 
 
+def _bucket_manifest_path(target_dir: str) -> str:
+    return os.path.join(target_dir, "_commit_manifest.json")
+
+
+def _bucket_staging_path(target_dir: str, b: int) -> str:
+    # dot-prefixed: invisible to hive partition discovery
+    return os.path.join(target_dir, f".staging_bucket_{b}")
+
+
+@contextmanager
+def _commit_lock(target_dir: str):
+    """Exclusive advisory lock serializing the commit-critical section
+    (manifest write → swaps → manifest removal) against concurrent
+    ``recover_bucket_commit`` callers.
+
+    Without it, a reader that sees the manifest DURING a live writer's
+    phase 3 would re-run the same swaps: the writer's own swap then
+    renames the just-committed bucket out to the backup and crashes on
+    the now-missing staging dir. flock is per-host — matching the
+    single-writer deployment (the reference is a singleton binlog reader
+    too); multi-host shared storage needs Delta/Iceberg commit logs,
+    as documented on :func:`rewrite_buckets`.
+    """
+    fd = os.open(
+        os.path.join(target_dir, "._commit_lock"), os.O_CREAT | os.O_RDWR, 0o644
+    )
+    try:
+        fcntl.flock(fd, fcntl.LOCK_EX)
+        yield
+    finally:
+        fcntl.flock(fd, fcntl.LOCK_UN)
+        os.close(fd)
+
+
+def recover_bucket_commit(target_dir: str) -> bool:
+    """Roll an interrupted multi-bucket commit FORWARD.
+
+    :func:`rewrite_buckets` stages every changed bucket first, then
+    atomically writes a manifest naming them, then swaps each bucket
+    in. A manifest on disk therefore means all staging data is
+    complete: recovery finishes the remaining swaps so the table
+    converges to the all-new state — never a mix that stays. No
+    manifest means the crash happened before the point of commit:
+    stale staging dirs are discarded and the table is the all-old
+    state. Returns True if a commit was rolled forward.
+
+    Takes the commit lock, so a live writer's phase 3 and a reader's
+    recovery never interleave; the manifest is re-checked under the
+    lock (a blocked reader usually finds it already gone).
+    """
+    manifest = _bucket_manifest_path(target_dir)
+    if not os.path.exists(manifest):  # cheap pre-check without the lock
+        return False
+    with _commit_lock(target_dir):
+        if not os.path.exists(manifest):  # writer finished while we waited
+            return False
+        with open(manifest) as f:
+            buckets = json.load(f)["buckets"]
+        for b in buckets:
+            bdir = os.path.join(target_dir, f"bucket={b}")
+            staged = _bucket_staging_path(target_dir, b)
+            if os.path.exists(staged):
+                swap_dir(staged, bdir)  # not yet (or half) swapped: finish it
+            else:
+                recover_swap(bdir)  # crashed mid-rename inside swap_dir
+                shutil.rmtree(backup_path(bdir), ignore_errors=True)
+        os.remove(manifest)
+    return True
+
+
+def _discard_stale_staging(target_dir: str) -> None:
+    """Writer-side cleanup of staging dirs orphaned by a crash BEFORE
+    the point of commit (no manifest ⇒ the staged data is dead weight:
+    each orphan is a complete bucket copy that would otherwise persist
+    until some batch happens to touch that exact bucket). Called only
+    from writers at the START of their own commit sequence — the
+    single-writer contract means no live phase-1 staging can be
+    deleted; reader-side recovery must NOT do this (it races a live
+    writer's staging). Under the commit lock so a roll-forward's swaps
+    never interleave."""
+    with _commit_lock(target_dir):
+        if os.path.exists(_bucket_manifest_path(target_dir)):
+            return  # committed: these dirs belong to a roll-forward
+        for e in os.listdir(target_dir):
+            if e.startswith(".staging_bucket_"):
+                shutil.rmtree(os.path.join(target_dir, e), ignore_errors=True)
+
+
+def rewrite_buckets(
+    target_dir: str,
+    buckets: "Iterable[int] | None",
+    build: "Callable[[int, str], DataFrame | None]",
+) -> None:
+    """Multi-bucket manifest commit over a ``bucket=N`` layout: every
+    listed bucket (``None`` = every bucket dir on disk) is rewritten to
+    ``build(b, bucket_dir)`` — the bucket's new content, or None to
+    leave it untouched — and the set commits atomically-on-recovery.
+
+    Phase 1 stages each changed bucket (reads still see the old table;
+    a bucket dir lost mid-swap is healed before ``build`` reads it).
+    Phase 2 writes the manifest naming the swap set — the point of
+    commit: a crash before it leaves the all-old table, after it the
+    next writer or reader (:func:`recover_bucket_commit`) rolls the
+    whole set forward. Phase 3 swaps every staged bucket in and removes
+    the manifest. Phases 2+3 hold the commit lock, so a concurrent
+    reader's recovery cannot replay the swaps mid-flight. Delta/Iceberg
+    commit logs give the same write-visibility point with real
+    snapshot isolation at scale."""
+    os.makedirs(target_dir, exist_ok=True)
+    recover_bucket_commit(target_dir)
+    _discard_stale_staging(target_dir)
+    if buckets is None:
+        recover_bucket_swaps(target_dir)
+        buckets = sorted(
+            int(e.split("=", 1)[1])
+            for e in os.listdir(target_dir)
+            if e.startswith("bucket=")
+            and os.path.isdir(os.path.join(target_dir, e))
+        )
+    changed = []
+    for b in buckets:
+        bdir = os.path.join(target_dir, f"bucket={b}")
+        recover_swap(bdir)
+        out = build(b, bdir)
+        if out is not None:
+            staged = _bucket_staging_path(target_dir, b)
+            shutil.rmtree(staged, ignore_errors=True)
+            out.write.mode("overwrite").parquet(staged)
+            changed.append(b)
+    if changed:
+        with _commit_lock(target_dir):
+            manifest = _bucket_manifest_path(target_dir)
+            write_json(manifest, {"buckets": [int(b) for b in changed]})
+            for b in changed:
+                swap_dir(
+                    _bucket_staging_path(target_dir, b),
+                    os.path.join(target_dir, f"bucket={b}"),
+                )
+            os.remove(manifest)
+
+
 def dir_size_bytes(path: str) -> int:
     total = 0
     for root, _dirs, files in os.walk(path):
@@ -135,17 +354,10 @@ def compact_parquet(
     recover_swap(path)
     size = dir_size_bytes(path)
     n_files = max(1, math.ceil(size / (target_file_mb * 1024 * 1024)))
-    # dot-prefixed staging sibling: invisible to hive partition
-    # discovery, so compacting one bucket=N dir of a partitioned table
-    # never surfaces a phantom "N._compact" partition mid-rewrite
-    d, b = os.path.split(path)
-    staged = os.path.join(d, "." + b + "._compact")
-    shutil.rmtree(staged, ignore_errors=True)
     df = spark.read.parquet(path).coalesce(n_files)
     if sort_cols:
         df = df.sortWithinPartitions(*sort_cols)
-    df.write.mode("overwrite").parquet(staged)
-    swap_dir(staged, path)
+    rewrite_dir(path, df)
     return parquet_file_count(path)
 
 
@@ -162,7 +374,7 @@ def compact_bucketed_table(
     PK-clustered (``sort_cols=["_pk"]``) so footer min/max stats on the
     key stay tight in the merged files. Any interrupted multi-bucket
     commit is rolled forward first; each per-bucket rewrite stays
-    crash-safe through the same staged-swap protocol as the upsert.
+    crash-safe through :func:`rewrite_dir`.
 
     Runs under the table's COMMIT LOCK: compaction rewrites the same
     bucket dirs the live upsert's manifest protocol swaps, and an
@@ -174,11 +386,6 @@ def compact_bucketed_table(
 
     Returns {bucket dir name: new file count}.
     """
-    from wing_binlog_go_spark.streaming.pipeline import (
-        _commit_lock,
-        recover_bucket_commit,
-    )
-
     recover_bucket_commit(target_dir)
     recover_bucket_swaps(target_dir)  # heal any bucket lost mid-swap
     out: dict[str, int] = {}
@@ -206,8 +413,8 @@ def optimize_zorder(
     """OPTIMIZE ZORDER for a plain-parquet table: rewrite ``path`` as
     z-clustered files (`operators.zorder.write_zordered` — one recipe,
     not a copy, so the curve option incl. ``'hilbert'`` is available
-    here too) through the same staged-swap crash-safe protocol as
-    :func:`compact_parquet`, sizing the output like compaction does.
+    here too) through :func:`rewrite_dir`, sizing the output like
+    compaction does.
     The write is a global range shuffle on the curve value (unlike
     compaction's shuffle-free coalesce) — the price of multi-column
     clustering, paid once offline and amortized over every later
@@ -218,14 +425,10 @@ def optimize_zorder(
     recover_swap(path)
     size = dir_size_bytes(path)
     n_files = max(1, math.ceil(size / (target_file_mb * 1024 * 1024)))
-    d, b = os.path.split(path)
-    staged = os.path.join(d, "." + b + "._zorder")
-    shutil.rmtree(staged, ignore_errors=True)
-    write_zordered(
+    rewrite_dir(path, lambda staged: write_zordered(
         spark.read.parquet(path), staged, cols,
         n_files=n_files, bits=bits, coding=coding, curve=curve,
-    )
-    swap_dir(staged, path)
+    ))
     return parquet_file_count(path)
 
 
@@ -270,13 +473,11 @@ def absorbed_batch_keys(store_dir: str) -> set:
     writers' replay probes treat these as committed (the partition no
     longer exists, but re-sketching the batch would double-count the
     additive merges)."""
-    import json as _json
-
     path = sketch_manifest_path(store_dir)
     if not os.path.exists(path):
         return set()
     with open(path) as f:
-        return set(_json.load(f)["absorbed"])
+        return set(json.load(f)["absorbed"])
 
 
 def _sketch_compaction_plan_path(store_dir: str) -> str:
@@ -291,7 +492,7 @@ def _recover_sketch_compaction(store_dir: str) -> bool:
     missing would double-count the absorbed batches after the promote.
 
     The plan file (``_staging/compacted.plan.json``, committed via
-    tmp+fsync+rename only AFTER the staged merge finished writing)
+    :func:`write_json` only AFTER the staged merge finished writing)
     disambiguates every crash window:
 
     - plan present + stage dir present → the merge is complete but the
@@ -307,8 +508,6 @@ def _recover_sketch_compaction(store_dir: str) -> bool:
 
     Returns True if any rename/deletion was performed (the caller then
     refreshes the listing cache)."""
-    import json as _json
-
     staging = os.path.join(store_dir, "_staging")
     if not os.path.isdir(staging):
         return False
@@ -317,7 +516,7 @@ def _recover_sketch_compaction(store_dir: str) -> bool:
     stage = os.path.join(staging, "compacted")
     if os.path.exists(plan_path):
         with open(plan_path) as f:
-            plan = _json.load(f)
+            plan = json.load(f)
         keep, parts = int(plan["keep"]), [int(p) for p in plan["parts"]]
         if os.path.isdir(stage):
             # merge complete, promote pending: finish the retire+promote
@@ -368,7 +567,7 @@ def compact_sketch_store(
        interrupted prior run first — restoring retired ``.old``
        partitions or promoting a completed staged merge, per its plan
        file — so every entry state converges.
-    1. The MANIFEST commits first (atomic tmp+fsync+rename): every
+    1. The MANIFEST commits first (:func:`write_json`): every
        absorbed bkey is recorded in ``_compacted.json`` before any
        partition moves, so an at-least-once replay of an absorbed batch
        is a no-op from this moment on (the writers' probes consult the
@@ -378,7 +577,7 @@ def compact_sketch_store(
        re-running the compaction converges.
     2. The merged table stages under ``_staging/compacted``; once the
        write finishes, the PLAN (keep key + absorbed keys) commits via
-       tmp+fsync+rename. Only then does the retire begin: each absorbed
+       :func:`write_json`. Only then does the retire begin: each absorbed
        ``bkey=<p>`` renames to ``_staging/bkey=<p>.old`` (hidden from
        reads, recoverable), the stage promotes to ``bkey=<keep>``, and
        the ``.old`` copies + plan are deleted LAST. A crash anywhere in
@@ -391,8 +590,6 @@ def compact_sketch_store(
        returns bit-identical answers before and after compaction.
 
     Returns {"absorbed": [...], "kind": kind}."""
-    import json as _json
-
     if kind not in _SKETCH_MERGES:
         raise ValueError(
             f"compact_sketch_store: unknown kind {kind!r} "
@@ -409,18 +606,10 @@ def compact_sketch_store(
     if len(parts) <= 1:
         return {"absorbed": [], "kind": kind}
 
-    def _commit_json(payload: dict, path: str) -> None:
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            _json.dump(payload, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.rename(tmp, path)
-
     # 1. manifest first — replays of absorbed batches must no-op even
     # if we crash mid-swap
     absorbed = sorted(set(parts) | absorbed_batch_keys(store_dir))
-    _commit_json({"absorbed": absorbed}, sketch_manifest_path(store_dir))
+    write_json(sketch_manifest_path(store_dir), {"absorbed": absorbed})
 
     # 2. merge, stage, then commit the plan (= "the staged merge is
     # complete and covers exactly these partitions")
@@ -432,9 +621,9 @@ def compact_sketch_store(
     stage = os.path.join(staging, "compacted")
     shutil.rmtree(stage, ignore_errors=True)
     merged.write.mode("overwrite").parquet(stage)
-    _commit_json(
-        {"keep": keep_key, "parts": parts},
+    write_json(
         _sketch_compaction_plan_path(store_dir),
+        {"keep": keep_key, "parts": parts},
     )
 
     # 3. retire the old partitions RESTORABLY, promote the merged one,

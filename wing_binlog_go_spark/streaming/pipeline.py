@@ -27,10 +27,9 @@ filters, not shuffles.
 
 from __future__ import annotations
 
-import fcntl
+import glob
 import json
 import os
-from contextlib import contextmanager
 from dataclasses import dataclass, field
 from typing import Callable
 
@@ -43,6 +42,16 @@ from wing_binlog_go_spark.functions.envelope import (
     to_envelopes_counted,
 )
 from wing_binlog_go_spark.sources.changelog import stream_changelog
+from wing_binlog_go_spark.streaming.maintenance import (  # noqa: F401
+    _bucket_manifest_path,  # re-exported at its historical import path
+    _commit_lock,  # re-exported at its historical import path
+    recover_bucket_commit,
+    recover_bucket_swaps,
+    recover_swap,
+    rewrite_buckets,
+    rewrite_dir,
+    write_json,
+)
 
 
 @dataclass
@@ -84,19 +93,7 @@ class IndexState:
         state["batches"] = {
             k: v for k, v in state["batches"].items() if int(k) >= batch_id - 10
         }
-        tmp = self.path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(state, f)
-            # fsync BEFORE the rename: os.replace is atomic against
-            # process crash, but after power loss a renamed-but-unsynced
-            # file can surface stale or empty — and a reverted "next"
-            # would hand a later batch an already-used index range
-            # (duplicate event_index = wrong LWW winners downstream).
-            # This matches the durability of the reference's O_SYNC pos
-            # write (util.go:11-57), not just its atomicity.
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self.path)
+        write_json(self.path, state)
         return base
 
 
@@ -348,46 +345,45 @@ def latest_image_per_pk(env: DataFrame, pk: str | list[str] = "id") -> DataFrame
     return _collapse_lww(change_rows_per_pk(env, pk))
 
 
+def _lww_merge(updates: DataFrame, table_dir: str) -> DataFrame:
+    """The replica merge rule, shared by the flat and bucketed writers:
+    the stored rows at ``table_dir`` (if any) ∪ the batch's winners,
+    collapsed last-writer-wins, tombstones dropped."""
+    if os.path.exists(table_dir):
+        current = updates.sparkSession.read.parquet(table_dir)
+        updates = _collapse_lww(
+            current.select("_pk", "row", "is_delete", "event_index").unionByName(
+                updates
+            )
+        )
+    return updates.filter(~F.col("is_delete"))
+
+
 def upsert_parquet(
     env: DataFrame, target_dir: str, pk: str | list[str] = "id"
 ) -> None:
     """Apply a batch of envelopes to a parquet table, last-writer-wins by
     event_index; idempotent under replay (re-applying the same envelopes
-    yields the same table). The commit is a staged write + atomic rename
-    swap (swap_dir), so a crash never leaves a half-written or deleted
-    table. Production: Delta ``MERGE INTO t USING u ON t.pk = u.pk WHEN
-    MATCHED ... WHEN NOT MATCHED INSERT`` — same keys, same winner rule.
+    yields the same table). Commits through ``maintenance.rewrite_dir``,
+    so a crash never leaves a half-written or deleted table. Production:
+    Delta ``MERGE INTO t USING u ON t.pk = u.pk WHEN MATCHED ... WHEN
+    NOT MATCHED INSERT`` — same keys, same winner rule.
     """
-    from wing_binlog_go_spark.streaming.maintenance import recover_swap, swap_dir
-
-    spark = env.sparkSession
     recover_swap(target_dir)
     updates = latest_image_per_pk(env, pk)
-    if os.path.exists(target_dir):
-        # empty-batch short-circuit: a multi-table replica route calls
-        # this once per registered table per micro-batch, and a table
-        # with no events must not pay a full read-and-rewrite of its
-        # accumulated replica (the scd2 writer's growth guard, applied
-        # here too)
-        if updates.isEmpty():
-            return
-        current = spark.read.parquet(target_dir)
-        merged = _collapse_lww(
-            current.select("_pk", "row", "is_delete", "event_index").unionByName(
-                updates
-            )
-        )
-    else:
-        merged = updates
-    result = merged.filter(~F.col("is_delete"))
-    # stage the full new table (also avoids the plan clobbering its own
-    # parquet input mid-scan), then swap directories atomically
-    tmp = target_dir + "._staging"
-    import shutil
+    # empty-batch short-circuit: a multi-table replica route calls this
+    # once per registered table per micro-batch, and a table with no
+    # events must not pay a full read-and-rewrite of its accumulated
+    # replica (the scd2 writer's growth guard, applied here too)
+    if os.path.exists(target_dir) and updates.isEmpty():
+        return
+    rewrite_dir(target_dir, _lww_merge(updates, target_dir))
 
-    shutil.rmtree(tmp, ignore_errors=True)
-    result.write.mode("overwrite").parquet(tmp)
-    swap_dir(tmp, target_dir)
+
+def _scd2_rows(env: DataFrame, pk: str | list[str]) -> DataFrame:
+    return change_rows_per_pk(env, pk).withColumnRenamed(
+        "event_index", "valid_from_index"
+    )
 
 
 def scd2_upsert_parquet(
@@ -415,45 +411,26 @@ def scd2_upsert_parquet(
 
     Scale: the per-key window is keyed on _pk (real cardinality — each
     key's history is short, never a calendar or a global sort) and the
-    commit is the same staged-write + atomic-rename swap as
-    ``upsert_parquet``. At 100 TB the same bucketed-manifest treatment
-    as ``upsert_parquet_bucketed`` applies (only buckets with affected
-    keys rewrite); closed versions of untouched keys are immutable so
-    a production layout would additionally tier them into append-only
-    closed-history partitions.
+    commit is ``maintenance.rewrite_dir``, like ``upsert_parquet``. At
+    100 TB the bucketed form (``scd2_upsert_parquet_bucketed``) applies
+    (only buckets with affected keys rewrite); closed versions of
+    untouched keys are immutable so a production layout would
+    additionally tier them into append-only closed-history partitions.
     """
-    from wing_binlog_go_spark.streaming.maintenance import recover_swap, swap_dir
-
-    spark = env.sparkSession
     recover_swap(target_dir)
-    fresh = change_rows_per_pk(env, pk).withColumnRenamed(
-        "event_index", "valid_from_index"
-    )
-    exists = os.path.exists(target_dir)
+    fresh = _scd2_rows(env, pk)
     # An empty batch subset (a multi-table route where this table saw no
     # events) must not re-read and rewrite the whole accumulated history
     # — that cost grows unboundedly with history size for zero benefit.
-    if exists and fresh.isEmpty():
+    if os.path.exists(target_dir) and fresh.isEmpty():
         return
-    if exists:
-        current = spark.read.parquet(target_dir).select(
-            "_pk", "row", "is_delete", "valid_from_index"
-        )
-        merged = current.unionByName(fresh)
-    else:
-        merged = fresh
-    result = _scd2_versions(merged)
-    tmp = target_dir + "._staging"
-    import shutil
-
-    shutil.rmtree(tmp, ignore_errors=True)
-    result.write.mode("overwrite").parquet(tmp)
-    swap_dir(tmp, target_dir)
+    rewrite_dir(target_dir, _scd2_merge(fresh, target_dir))
 
 
-def _scd2_versions(merged: DataFrame) -> DataFrame:
-    """Open-form rows → closed SCD2 versions, shared by the full-table
-    and bucketed writers.
+def _scd2_merge(fresh: DataFrame, table_dir: str) -> DataFrame:
+    """The history merge rule, shared by the flat and bucketed writers:
+    stored open-form rows at ``table_dir`` (if any) ∪ the batch's
+    change rows → closed SCD2 versions.
 
     Replay dedupe: a re-delivered event re-derives the identical
     (_pk, valid_from_index) version, so the tie-break is a pure
@@ -464,6 +441,13 @@ def _scd2_versions(merged: DataFrame) -> DataFrame:
     version is still deterministic across replays instead of an
     arbitrary partition-order pick.  Version closing keys on _pk (real
     cardinality, short per-key history — never a global sort)."""
+    merged = fresh
+    if os.path.exists(table_dir):
+        merged = (
+            fresh.sparkSession.read.parquet(table_dir)
+            .select("_pk", "row", "is_delete", "valid_from_index")
+            .unionByName(fresh)
+        )
     open_form = (
         merged.withColumn(
             "_w",
@@ -492,77 +476,40 @@ def _scd2_versions(merged: DataFrame) -> DataFrame:
     )
 
 
-def _bucket_manifest_path(target_dir: str) -> str:
-    return os.path.join(target_dir, "_commit_manifest.json")
-
-
-@contextmanager
-def _commit_lock(target_dir: str):
-    """Exclusive advisory lock serializing the commit-critical section
-    (manifest write → swaps → manifest removal) against concurrent
-    ``recover_bucket_commit`` callers.
-
-    Without it, a reader that sees the manifest DURING a live writer's
-    phase 3 would re-run the same swaps: the writer's own swap then
-    renames the just-committed bucket out to the backup and crashes on
-    the now-missing staging dir. flock is per-host — matching the
-    single-writer deployment (the reference is a singleton binlog reader
-    too); multi-host shared storage needs Delta/Iceberg commit logs,
-    as documented on ``upsert_parquet_bucketed``.
-    """
-    fd = os.open(
-        os.path.join(target_dir, "._commit_lock"), os.O_CREAT | os.O_RDWR, 0o644
-    )
+def _rewrite_buckets(
+    target_dir: str,
+    rows: DataFrame,
+    num_buckets: int,
+    merge: Callable[[DataFrame, str], DataFrame],
+    buckets: "list[int] | None" = None,
+) -> None:
+    """THE bucketed-writer driver: ``rows`` (keyed by ``_pk``) are
+    bucketed by pmod(xxhash64(_pk), B) — deterministic, so replays hit
+    the same buckets and idempotence holds per bucket — and every
+    bucket they touch (or every listed one) is rewritten to
+    ``merge(bucket's rows, bucket dir)`` through the manifest commit
+    (``maintenance.rewrite_buckets``). Every key's whole history lives
+    in exactly one bucket, so a per-key merge rule is exact per bucket.
+    An empty batch stages nothing and writes no manifest."""
+    bucket = F.pmod(F.xxhash64(F.col("_pk")), F.lit(num_buckets)).cast("int")
+    rows = rows.withColumn("_bucket", bucket)
+    if buckets is not None:
+        rows = rows.filter(F.col("_bucket").isin(list(buckets)))
+    # persist: the distinct-buckets collect AND every per-bucket filter
+    # read this; without it each pass recomputes the full aggregation
+    rows = rows.persist()
     try:
-        fcntl.flock(fd, fcntl.LOCK_EX)
-        yield
+        if buckets is None:
+            buckets = [r._bucket for r in rows.select("_bucket").distinct().collect()]
+        rewrite_buckets(
+            target_dir,
+            buckets,
+            lambda b, bdir: merge(
+                rows.filter(F.col("_bucket") == b).drop("_bucket"), bdir
+            ),
+        )
     finally:
-        fcntl.flock(fd, fcntl.LOCK_UN)
-        os.close(fd)
-
-
-def recover_bucket_commit(target_dir: str) -> bool:
-    """Roll an interrupted multi-bucket commit FORWARD.
-
-    The commit protocol (``upsert_parquet_bucketed``) stages every
-    changed bucket first, then atomically writes a manifest naming them,
-    then swaps each bucket in. A manifest on disk therefore means all
-    staging data is complete: recovery finishes the remaining swaps so
-    the table converges to the all-new state — never a mix that stays.
-    No manifest means the crash happened before the point of commit:
-    stale staging dirs are discarded and the table is the all-old state.
-    Returns True if a commit was rolled forward.
-
-    Takes the commit lock, so a live writer's phase 3 and a reader's
-    recovery never interleave; the manifest is re-checked under the
-    lock (a blocked reader usually finds it already gone).
-    """
-    import shutil
-
-    from wing_binlog_go_spark.streaming.maintenance import (
-        backup_path,
-        recover_swap,
-        swap_dir,
-    )
-
-    manifest = _bucket_manifest_path(target_dir)
-    if not os.path.exists(manifest):  # cheap pre-check without the lock
-        return False
-    with _commit_lock(target_dir):
-        if not os.path.exists(manifest):  # writer finished while we waited
-            return False
-        with open(manifest) as f:
-            buckets = json.load(f)["buckets"]
-        for b in buckets:
-            bdir = os.path.join(target_dir, f"bucket={b}")
-            staged = os.path.join(target_dir, f".staging_bucket_{b}")
-            if os.path.exists(staged):
-                swap_dir(staged, bdir)  # not yet (or half) swapped: finish it
-            else:
-                recover_swap(bdir)  # crashed mid-rename inside swap_dir
-                shutil.rmtree(backup_path(bdir), ignore_errors=True)
-        os.remove(manifest)
-    return True
+        rows.unpersist()
 
 
 def upsert_parquet_bucketed(
@@ -575,56 +522,13 @@ def upsert_parquet_bucketed(
     contain changed keys, so per-batch IO is O(changed buckets), not
     O(table) — the same reason Delta MERGE + clustering touches few
     files. With uniform keys and B buckets, a batch touching k keys
-    rewrites ≈ min(k, B)/B of the table.
-
-    Multi-bucket commits are atomic-on-recovery: every staging dir is
-    written BEFORE an atomically-renamed manifest names the swap set;
-    a crash before the manifest leaves the all-old table, after it the
-    next writer (or reader via ``recover_bucket_commit``) rolls the
-    whole set forward. Delta/Iceberg commit logs give the same
-    write-visibility point with real snapshot isolation at scale.
-
-    Deterministic bucket fn (pmod(xxhash64(pk), B)) means replays hit
-    the same buckets — idempotence is preserved per bucket.
+    rewrites ≈ min(k, B)/B of the table. Same merge rule as
+    ``upsert_parquet``; multi-bucket commits are atomic-on-recovery
+    (``maintenance.rewrite_buckets``).
     """
-    import shutil
-
-    from wing_binlog_go_spark.streaming.maintenance import recover_swap, swap_dir
-
-    spark = env.sparkSession
-    os.makedirs(target_dir, exist_ok=True)
-    recover_bucket_commit(target_dir)
-    _discard_stale_staging(target_dir)
-    bucket = F.pmod(F.xxhash64(F.col("_pk")), F.lit(num_buckets)).cast("int")
-    # persist: the distinct-buckets collect AND every per-bucket filter
-    # read this; without it each pass recomputes the full aggregation
-    updates = latest_image_per_pk(env, pk).withColumn("_bucket", bucket).persist()
-    try:
-        changed = [r._bucket for r in updates.select("_bucket").distinct().collect()]
-        if not changed:  # empty batch: no staging, no manifest churn
-            return
-        # phase 1: stage every changed bucket (reads see the old table)
-        for b in changed:
-            bdir = os.path.join(target_dir, f"bucket={b}")
-            recover_swap(bdir)
-            u = updates.filter(F.col("_bucket") == b).drop("_bucket")
-            if os.path.exists(bdir):
-                current = spark.read.parquet(bdir)
-                merged = _collapse_lww(
-                    current.select(
-                        "_pk", "row", "is_delete", "event_index"
-                    ).unionByName(u)
-                )
-            else:
-                merged = u
-            result = merged.filter(~F.col("is_delete"))
-            # dot-prefixed staging dir: invisible to hive partition discovery
-            tmp = os.path.join(target_dir, f".staging_bucket_{b}")
-            shutil.rmtree(tmp, ignore_errors=True)
-            result.write.mode("overwrite").parquet(tmp)
-        _commit_staged_buckets(target_dir, changed)
-    finally:
-        updates.unpersist()
+    _rewrite_buckets(
+        target_dir, latest_image_per_pk(env, pk), num_buckets, _lww_merge
+    )
 
 
 def repair_buckets(
@@ -646,82 +550,17 @@ def repair_buckets(
     bucket; rows carry the snapshot's event_index, so later CDC events
     still win by the last-writer rule and replayed older events cannot
     resurrect. Untouched buckets are never read or written. Commit =
-    the same staged-dirs + atomic manifest protocol (crash before the
-    manifest leaves the all-old table; after it, roll-forward).
+    ``maintenance.rewrite_buckets``, like the upsert.
     """
-    import shutil
-
     if not buckets:
         return
-    os.makedirs(target_dir, exist_ok=True)
-    recover_bucket_commit(target_dir)
-    _discard_stale_staging(target_dir)
-    bucket = F.pmod(F.xxhash64(F.col("_pk")), F.lit(num_buckets)).cast("int")
-    fresh = (
-        latest_image_per_pk(snapshot_env, pk)
-        .withColumn("_bucket", bucket)
-        .filter(F.col("_bucket").isin(list(buckets)))
-        .persist()
+    _rewrite_buckets(
+        target_dir,
+        latest_image_per_pk(snapshot_env, pk),
+        num_buckets,
+        lambda fresh, _bdir: fresh.filter(~F.col("is_delete")),
+        buckets=list(buckets),
     )
-    try:
-        for b in buckets:
-            u = fresh.filter(F.col("_bucket") == b).drop("_bucket").filter(
-                ~F.col("is_delete")
-            )
-            tmp = os.path.join(target_dir, f".staging_bucket_{b}")
-            shutil.rmtree(tmp, ignore_errors=True)
-            u.write.mode("overwrite").parquet(tmp)
-        _commit_staged_buckets(target_dir, list(buckets))
-    finally:
-        fresh.unpersist()
-
-
-def _discard_stale_staging(target_dir: str) -> None:
-    """Writer-side cleanup of staging dirs orphaned by a crash BEFORE
-    the point of commit (no manifest ⇒ the staged data is dead weight:
-    each orphan is a complete bucket copy that would otherwise persist
-    until some batch happens to touch that exact bucket). Called only
-    from writers at the START of their own commit sequence — the
-    single-writer contract means no live phase-1 staging can be
-    deleted; reader-side recovery must NOT do this (it races a live
-    writer's staging). Under the commit lock so a roll-forward's swaps
-    never interleave."""
-    import glob as _glob
-    import shutil
-
-    with _commit_lock(target_dir):
-        if os.path.exists(_bucket_manifest_path(target_dir)):
-            return  # committed: these dirs belong to a roll-forward
-        for staged in _glob.glob(os.path.join(target_dir, ".staging_bucket_*")):
-            shutil.rmtree(staged, ignore_errors=True)
-
-
-def _commit_staged_buckets(target_dir: str, changed: list[int]) -> None:
-    """Phases 2+3 of the multi-bucket commit, under the commit lock so
-    a concurrent reader's recover_bucket_commit cannot replay our swaps
-    mid-flight: the manifest lands atomically (the point of commit),
-    then every staged bucket swaps in; any crash after the manifest is
-    rolled forward."""
-    from wing_binlog_go_spark.streaming.maintenance import swap_dir
-
-    with _commit_lock(target_dir):
-        manifest = _bucket_manifest_path(target_dir)
-        with open(manifest + ".tmp", "w") as f:
-            json.dump({"buckets": [int(b) for b in changed]}, f)
-            # fsync before the rename: bucket renames below can reach
-            # disk while an unsynced manifest does not — after power
-            # loss recovery would then see "no manifest = crash before
-            # commit" and leave a lasting old/new bucket mix, exactly
-            # what this protocol exists to prevent
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(manifest + ".tmp", manifest)
-        for b in changed:
-            swap_dir(
-                os.path.join(target_dir, f".staging_bucket_{b}"),
-                os.path.join(target_dir, f"bucket={b}"),
-            )
-        os.remove(manifest)
 
 
 def scd2_vacuum(
@@ -738,56 +577,37 @@ def scd2_vacuum(
     correct on later batches — test-asserted by upserting after a
     vacuum).
 
-    Works on both layouts: flat (staged-write + atomic-rename swap) and
-    bucketed (per-bucket staging + the manifest commit, only buckets
-    actually holding expired versions rewrite). Returns
+    Works on both layouts: flat (``maintenance.rewrite_dir``) and
+    bucketed (``maintenance.rewrite_buckets``; only buckets actually
+    holding expired versions rewrite). Returns
     {"kept": n, "dropped": n}.
     """
-    import glob as _glob
-    import shutil
-
-    from wing_binlog_go_spark.streaming.maintenance import recover_swap, swap_dir
-
     keep = (
         F.col("is_current")
         | F.col("valid_to_index").isNull()
         | (F.col("valid_to_index") >= retain_from_index)
     )
-    if _glob.glob(os.path.join(target_dir, "bucket=*")):
-        recover_bucket_commit(target_dir)
-        _discard_stale_staging(target_dir)
-        kept = dropped = 0
-        changed = []
-        for bdir in sorted(_glob.glob(os.path.join(target_dir, "bucket=*"))):
-            b = int(bdir.rsplit("=", 1)[1])
-            recover_swap(bdir)
-            cur = spark.read.parquet(bdir)
-            n_all = cur.count()
-            survivors = cur.filter(keep).localCheckpoint(eager=True)
-            n_keep = survivors.count()
-            kept += n_keep
-            dropped += n_all - n_keep
-            if n_keep == n_all:
-                continue  # nothing expired in this bucket — never rewrite
-            tmp = os.path.join(target_dir, f".staging_bucket_{b}")
-            shutil.rmtree(tmp, ignore_errors=True)
-            survivors.write.mode("overwrite").parquet(tmp)
-            changed.append(b)
-        if changed:
-            _commit_staged_buckets(target_dir, changed)
-        return {"kept": kept, "dropped": dropped}
+    counts = {"kept": 0, "dropped": 0}
 
-    recover_swap(target_dir)
-    cur = spark.read.parquet(target_dir)
-    n_all = cur.count()
-    survivors = cur.filter(keep).localCheckpoint(eager=True)
-    n_keep = survivors.count()
-    if n_keep != n_all:
-        tmp = target_dir + "._staging"
-        shutil.rmtree(tmp, ignore_errors=True)
-        survivors.write.mode("overwrite").parquet(tmp)
-        swap_dir(tmp, target_dir)
-    return {"kept": n_keep, "dropped": n_all - n_keep}
+    def expire(table_dir: str) -> "DataFrame | None":
+        """Survivors of ``table_dir``, or None when nothing expired
+        there (never rewrite a table the vacuum leaves unchanged)."""
+        cur = spark.read.parquet(table_dir)
+        n_all = cur.count()
+        survivors = cur.filter(keep).localCheckpoint(eager=True)
+        n_keep = survivors.count()
+        counts["kept"] += n_keep
+        counts["dropped"] += n_all - n_keep
+        return None if n_keep == n_all else survivors
+
+    if glob.glob(os.path.join(target_dir, "bucket=*")):
+        rewrite_buckets(target_dir, None, lambda _b, bdir: expire(bdir))
+    else:
+        recover_swap(target_dir)
+        survivors = expire(target_dir)
+        if survivors is not None:
+            rewrite_dir(target_dir, survivors)
+    return counts
 
 
 def scd2_upsert_parquet_bucketed(
@@ -799,53 +619,11 @@ def scd2_upsert_parquet_bucketed(
     rewrites the buckets whose keys actually changed, so per-batch IO
     is O(changed buckets' history), not O(total history). Closed
     versions of untouched keys sit in untouched buckets and are never
-    rewritten.
-
-    Version recomputation is safe per-bucket because every key's whole
-    history lives in exactly one bucket (deterministic
-    pmod(xxhash64(_pk), B)), so the per-key windows in
-    ``_scd2_versions`` see complete histories. Same empty-batch
-    short-circuit, content tie-break, and manifest commit protocol
-    (stage → manifest → swap, rolled forward on crash) as the replica's
-    ``upsert_parquet_bucketed``; read back with ``read_bucketed_table``.
+    rewritten. Same merge rule as ``scd2_upsert_parquet`` and same
+    commit as ``upsert_parquet_bucketed``; read back with
+    ``read_bucketed_table``.
     """
-    import shutil
-
-    from wing_binlog_go_spark.streaming.maintenance import recover_swap
-
-    spark = env.sparkSession
-    os.makedirs(target_dir, exist_ok=True)
-    recover_bucket_commit(target_dir)
-    _discard_stale_staging(target_dir)
-    bucket = F.pmod(F.xxhash64(F.col("_pk")), F.lit(num_buckets)).cast("int")
-    fresh = (
-        change_rows_per_pk(env, pk)
-        .withColumnRenamed("event_index", "valid_from_index")
-        .withColumn("_bucket", bucket)
-        .persist()
-    )
-    try:
-        changed = [r._bucket for r in fresh.select("_bucket").distinct().collect()]
-        if not changed:  # nothing for this table in the batch
-            return
-        for b in changed:
-            bdir = os.path.join(target_dir, f"bucket={b}")
-            recover_swap(bdir)
-            u = fresh.filter(F.col("_bucket") == b).drop("_bucket")
-            if os.path.exists(bdir):
-                current = spark.read.parquet(bdir).select(
-                    "_pk", "row", "is_delete", "valid_from_index"
-                )
-                merged = current.unionByName(u)
-            else:
-                merged = u
-            result = _scd2_versions(merged)
-            tmp = os.path.join(target_dir, f".staging_bucket_{b}")
-            shutil.rmtree(tmp, ignore_errors=True)
-            result.write.mode("overwrite").parquet(tmp)
-        _commit_staged_buckets(target_dir, changed)
-    finally:
-        fresh.unpersist()
+    _rewrite_buckets(target_dir, _scd2_rows(env, pk), num_buckets, _scd2_merge)
 
 
 def read_bucketed_table(spark: SparkSession, target_dir: str) -> DataFrame:
@@ -855,8 +633,6 @@ def read_bucketed_table(spark: SparkSession, target_dir: str) -> DataFrame:
     a lasting mix of old and new buckets; a bucket dir lost mid-swap
     (only its hidden backup on disk — invisible to partition discovery)
     is restored so its rows cannot silently vanish from the read."""
-    from wing_binlog_go_spark.streaming.maintenance import recover_bucket_swaps
-
     recover_bucket_commit(target_dir)
     recover_bucket_swaps(target_dir)
     return spark.read.parquet(target_dir).drop("bucket")

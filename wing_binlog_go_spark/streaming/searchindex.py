@@ -69,7 +69,7 @@ def incremental_index_apply(
     lock: an unserialized fold whose read snapshot missed this batch's
     partition would swap a postings dir WITHOUT it into place — silent
     data loss, not just a benign race."""
-    from wing_binlog_go_spark.streaming.pipeline import _commit_lock
+    from wing_binlog_go_spark.streaming.maintenance import _commit_lock
 
     os.makedirs(store_dir, exist_ok=True)
     with _commit_lock(store_dir):
@@ -255,15 +255,15 @@ def compact_search_index(spark: SparkSession, store_dir: str) -> None:
     Replay safety is the subtle part: after folding, a redelivered old
     batch would re-CREATE its ingest partition next to the folded base
     and double its postings. The floor meta therefore commits FIRST
-    (fsync-before-rename): once it names the fold's high mark, the
+    (``maintenance.write_json``): once it names the fold's high mark, the
     writer skips any batch at or below it, and only then do the folded
     directories swap in. A crash between the two swaps is benign —
     folding preserves the exact row multiset, so postings/doclens stay
     content-equivalent partition-layout aside, and the next compaction
-    re-folds. Readers never see a half-written table (staged swap_dir,
-    same as every maintainer).
+    re-folds. Readers never see a half-written table (each fold commits
+    through ``maintenance.rewrite_dir``, same as every maintainer).
     """
-    from wing_binlog_go_spark.streaming.pipeline import _commit_lock
+    from wing_binlog_go_spark.streaming.maintenance import _commit_lock
 
     if not os.path.exists(store_dir):
         return
@@ -272,9 +272,11 @@ def compact_search_index(spark: SparkSession, store_dir: str) -> None:
 
 
 def _compact_locked(spark: SparkSession, store_dir: str) -> None:
-    import json
-
-    from wing_binlog_go_spark.streaming.maintenance import recover_swap, swap_dir
+    from wing_binlog_go_spark.streaming.maintenance import (
+        recover_swap,
+        rewrite_dir,
+        write_json,
+    )
 
     post_dir = os.path.join(store_dir, "postings")
     dl_dir = os.path.join(store_dir, "doclens")
@@ -287,30 +289,22 @@ def _compact_locked(spark: SparkSession, store_dir: str) -> None:
     if floor is None:
         return
     # 1. commit the floor BEFORE touching data: blocks replay dupes
-    meta = os.path.join(store_dir, _COMPACT_META)
-    tmp = meta + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({"compacted_through": int(floor)}, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, meta)
+    write_json(
+        os.path.join(store_dir, _COMPACT_META), {"compacted_through": int(floor)}
+    )
     # 2. fold each table under a single ingest=floor partition
-    staged_post = post_dir + "._compact"
-    (
+    rewrite_dir(post_dir, lambda staged: (
         post.withColumn("ingest", F.lit(int(floor)).cast("long"))
         .repartition("bucket")
         .write.mode("overwrite")
         .partitionBy("ingest", "bucket")
-        .parquet(staged_post)
-    )
-    swap_dir(staged_post, post_dir)
+        .parquet(staged)
+    ))
     dl = spark.read.parquet(dl_dir)
-    staged_dl = dl_dir + "._compact"
-    (
+    rewrite_dir(dl_dir, lambda staged: (
         dl.withColumn("ingest", F.lit(int(floor)).cast("long"))
         .coalesce(4)
         .write.mode("overwrite")
         .partitionBy("ingest")
-        .parquet(staged_dl)
-    )
-    swap_dir(staged_dl, dl_dir)
+        .parquet(staged)
+    ))

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from wing_binlog_go_spark.functions.envelope import envelope_json
+from wing_binlog_go_spark.streaming.maintenance import write_json
 
 
 def parquet_route_writer(out_dir: str) -> Callable[[DataFrame, int], None]:
@@ -1078,6 +1079,29 @@ def _sketch_batch_committed(store_dir: str, part_dir: str, batch_key) -> bool:
     return batch_key in absorbed_batch_keys(store_dir)
 
 
+def _publish_batch_partition(
+    df: DataFrame, store_dir: str, part_dir: str, batch_key
+) -> None:
+    """Stage-then-rename commit of one sketch batch partition: the
+    multi-file parquet job is not atomic, so it writes to
+    ``store_dir/_staging/bkey=<key>`` (invisible to Spark reads —
+    leading underscore) and the directory rename to ``part_dir`` is the
+    commit point. A crash mid-write therefore leaves NO ``bkey=``
+    directory (else the replay probe would skip the batch and the
+    sketch would permanently undercount), only staging debris that the
+    retry discards. The bkey partition value comes from the directory
+    name after the rename."""
+    stage_dir = os.path.join(store_dir, "_staging", f"bkey={batch_key}")
+    shutil.rmtree(stage_dir, ignore_errors=True)  # crashed earlier attempt
+    df.write.mode("overwrite").parquet(stage_dir)
+    os.makedirs(os.path.dirname(part_dir), exist_ok=True)
+    if os.path.isdir(part_dir):
+        # parquet-less debris (the pre-rename writer's crash window) —
+        # clear it or the commit rename gets ENOTEMPTY
+        shutil.rmtree(part_dir)
+    os.rename(stage_dir, part_dir)
+
+
 def cms_sketch_writer(
     store_dir: str,
     table: str,
@@ -1089,13 +1113,9 @@ def cms_sketch_writer(
     """Route writer maintaining a Count-Min token sketch from the CDC
     stream (`operators.stats.cms_build`): each micro-batch's INSERT
     docs tokenize and sketch into a PARTITION keyed by the batch's
-    minimum doc id (an at-least-once-stable batch key). The batch
-    sketch is first written to ``_staging/bkey=<key>`` and then
-    ``os.rename``d into place, so the ``bkey=`` directory appears
-    ATOMICALLY: a crash mid-write leaves only staging debris (invisible
-    to Spark reads — leading underscore — and overwritten on retry),
-    never a partial committed partition. Directory presence is
-    therefore a sound commit marker and a replayed batch is a no-op
+    minimum doc id (an at-least-once-stable batch key). The partition
+    appears ATOMICALLY (``_publish_batch_partition``), so directory
+    presence is a sound commit marker and a replayed batch is a no-op
     instead of a double-count, which matters precisely because sketches
     merge by ADDITION. Read the merged sketch back with
     ``read_cms_sketch`` (cell-wise sum across partitions — the
@@ -1133,21 +1153,7 @@ def cms_sketch_writer(
             F.explode(F.split(F.lower("_payload"), " ")).alias("tok")
         )
         sketch = cms_build(toks, "tok", width=width, depth=depth)
-        # Stage-then-rename commit: the multi-file parquet job is not
-        # atomic, so a crash mid-write must leave NO bkey= directory
-        # (else the replay probe would skip the batch and the sketch
-        # would permanently undercount). The bkey partition value comes
-        # from the directory name after the rename.
-        stage_dir = os.path.join(store_dir, "_staging", f"bkey={batch_key}")
-        if os.path.isdir(stage_dir):
-            shutil.rmtree(stage_dir)  # crashed earlier attempt: discard
-        sketch.write.mode("overwrite").parquet(stage_dir)
-        os.makedirs(store_dir, exist_ok=True)
-        if os.path.isdir(part_dir):
-            # parquet-less debris (the pre-rename writer's crash
-            # window) — clear it or the commit rename gets ENOTEMPTY
-            shutil.rmtree(part_dir)
-        os.rename(stage_dir, part_dir)  # the commit point
+        _publish_batch_partition(sketch, store_dir, part_dir, batch_key)
 
     return write
 
@@ -1209,17 +1215,7 @@ def mg_sketch_writer(
             F.explode(F.split(F.lower("_payload"), " ")).alias("tok")
         )
         summary = misra_gries_topk(toks, "tok", k=k)
-        # Stage-then-rename (see cms_sketch_writer): directory rename is
-        # the atomic commit point; a crash mid-parquet-job leaves only
-        # _staging debris, never a skippable partial partition.
-        stage_dir = os.path.join(store_dir, "_staging", f"bkey={batch_key}")
-        if os.path.isdir(stage_dir):
-            shutil.rmtree(stage_dir)  # crashed earlier attempt: discard
-        summary.write.mode("overwrite").parquet(stage_dir)
-        os.makedirs(store_dir, exist_ok=True)
-        if os.path.isdir(part_dir):
-            shutil.rmtree(part_dir)  # parquet-less pre-rename debris
-        os.rename(stage_dir, part_dir)  # the commit point
+        _publish_batch_partition(summary, store_dir, part_dir, batch_key)
 
     return write
 
@@ -1288,14 +1284,7 @@ def kmv_sketch_writer(
         sketch = kmv_bottom_k(
             docs.select(kmv_hash("_key").alias("h")), k
         )
-        stage_dir = os.path.join(store_dir, "_staging", f"bkey={batch_key}")
-        if os.path.isdir(stage_dir):
-            shutil.rmtree(stage_dir)  # crashed earlier attempt: discard
-        sketch.write.mode("overwrite").parquet(stage_dir)
-        os.makedirs(store_dir, exist_ok=True)
-        if os.path.isdir(part_dir):
-            shutil.rmtree(part_dir)  # parquet-less debris — see cms writer
-        os.rename(stage_dir, part_dir)  # the commit point
+        _publish_batch_partition(sketch, store_dir, part_dir, batch_key)
 
     return write
 
@@ -1376,14 +1365,7 @@ def qdigest_sketch_writer(
         sketch = qdigest_build(docs, "_value", bits=bits, k=k).select(
             "id", "cnt"
         )
-        stage_dir = os.path.join(store_dir, "_staging", f"bkey={batch_key}")
-        if os.path.isdir(stage_dir):
-            shutil.rmtree(stage_dir)  # crashed earlier attempt: discard
-        sketch.write.mode("overwrite").parquet(stage_dir)
-        os.makedirs(store_dir, exist_ok=True)
-        if os.path.isdir(part_dir):
-            shutil.rmtree(part_dir)  # parquet-less debris — see cms writer
-        os.rename(stage_dir, part_dir)  # the commit point
+        _publish_batch_partition(sketch, store_dir, part_dir, batch_key)
 
     return write
 
@@ -1472,13 +1454,8 @@ def drift_monitor_writer(
                 int(r.bin): int(r.c)
                 for r in rows.groupBy("bin").agg(F.count("*").alias("c")).collect()
             }
-            tmp = ref_path + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(
-                    {"bins": prof, "n": sum(prof.values()),
-                     "bin_width": bin_width, "cap": cap}, f,
-                )
-            os.rename(tmp, ref_path)
+            write_json(ref_path, {"bins": prof, "n": sum(prof.values()),
+                                  "bin_width": bin_width, "cap": cap})
         with open(ref_path) as f:
             ref = json.load(f)
         ref_rows = [(int(b), int(c)) for b, c in ref["bins"].items()]
@@ -1519,14 +1496,7 @@ def drift_monitor_writer(
                 ).alias("psi_r"),
             )
         )
-        stage_dir = os.path.join(store_dir, "_staging", f"bkey={batch_key}")
-        if os.path.isdir(stage_dir):
-            shutil.rmtree(stage_dir)
-        psi.write.mode("overwrite").parquet(stage_dir)
-        os.makedirs(os.path.join(store_dir, "psi"), exist_ok=True)
-        if os.path.isdir(part_dir):
-            shutil.rmtree(part_dir)
-        os.rename(stage_dir, part_dir)  # the commit point
+        _publish_batch_partition(psi, store_dir, part_dir, batch_key)
 
     return write
 

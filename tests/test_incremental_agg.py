@@ -353,7 +353,8 @@ def test_minmax_matches_batch_recompute_randomized(spark, tmp_path):
 def test_minmax_route_composed_with_upsert_replica(spark, tmp_path):
     """End-to-end composition through the real pipeline: the upsert
     route materializes the replica FIRST, the minmax route recomputes
-    from it (routes run in list order inside one foreachBatch)."""
+    from it (routes run concurrently inside one foreachBatch, and the
+    minmax route is marked to run after every route before it)."""
     from wing_binlog_go_spark.sources.changelog import write_fixture_changelog
     from wing_binlog_go_spark.streaming.aggregate import (
         incremental_minmax_writer,

@@ -21,32 +21,12 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 
 # pandas_udf registration needs a live SparkSession, so UDFs are built
 # lazily on first use (module import must stay session-free).
 _CACHE: dict[str, object] = {}
-
-
-def norm_value(*cols):
-    """Vectorized scalar example: signed log1p compression.
-
-    Deliberately ROW-LOCAL: a scalar pandas_udf sees one Arrow batch at
-    a time, so any cross-row statistic (min/max/mean) would be
-    batch-local and partitioning-dependent. Column-global scaling
-    belongs in an aggregate + join (or Window), not a scalar UDF.
-    """
-    if "norm" not in _CACHE:
-
-        def _norm(v: pd.Series) -> pd.Series:
-            import numpy as np
-
-            return np.sign(v) * np.log1p(v.abs())
-
-        _CACHE["norm"] = pandas_udf(_norm, "double")
-    return _CACHE["norm"](*cols)
 
 
 def weighted_mean(*cols):

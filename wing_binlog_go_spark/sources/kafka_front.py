@@ -12,30 +12,10 @@ is exactly how tests exercise them without a broker.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from wing_binlog_go_spark.functions.envelope import EVENT_SCHEMA
-
-
-def kafka_envelope_stream(
-    spark: SparkSession,
-    bootstrap: str,
-    topics: str,
-    starting_offsets: str = "earliest",
-    max_offsets_per_trigger: int | None = 10000,
-) -> DataFrame:
-    """readStream from Kafka → parsed envelope columns. maxOffsetsPerTrigger
-    is the backpressure bound (O18)."""
-    reader = (
-        spark.readStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap)
-        .option("subscribe", topics)
-        .option("startingOffsets", starting_offsets)
-    )
-    if max_offsets_per_trigger is not None:
-        reader = reader.option("maxOffsetsPerTrigger", str(max_offsets_per_trigger))
-    return parse_kafka_records(reader.load())
 
 
 def parse_kafka_records(records: DataFrame) -> DataFrame:

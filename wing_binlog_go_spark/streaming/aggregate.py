@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from wing_binlog_go_spark.streaming.maintenance import recover_swap, rewrite_dir
+from wing_binlog_go_spark.streaming.pipeline import after_earlier_routes
 
 _META = "_agg_meta.json"
 
@@ -388,9 +389,10 @@ def incremental_minmax_apply(
     ``replica`` is a callable ``spark -> DataFrame(grp, val)`` over the
     CURRENT live table (``replica_minmax_source`` adapts the upsert
     materializer's output). ORDERING CONTRACT: the replica must already
-    include this batch — in ``run_pipeline`` terms, put the upsert Route
-    BEFORE the minmax Route (routes run in list order within the shared
-    foreachBatch).
+    include this batch — in ``run_pipeline`` terms, list the upsert Route
+    BEFORE the minmax Route. Routes of a batch run concurrently, but
+    ``incremental_minmax_writer`` is marked ``after_earlier_routes``, so
+    it starts only after every route before it has committed.
 
     Same replay guard (event_index high-water mark) and staged-swap
     commit as ``incremental_agg_apply``; recompute is idempotent by
@@ -480,8 +482,10 @@ def incremental_minmax_apply(
 def incremental_minmax_writer(
     state_dir: str, group_key: str, value_field: str, replica
 ):
-    """foreachBatch hook for the MIN/MAX maintained table. Place AFTER
-    the upsert route feeding ``replica`` (see ordering contract)."""
+    """foreachBatch hook for the MIN/MAX maintained table. List it AFTER
+    the upsert route feeding ``replica``: it is marked
+    ``after_earlier_routes``, so it runs once every route before it has
+    returned (see ordering contract)."""
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
         incremental_minmax_apply(
@@ -493,7 +497,7 @@ def incremental_minmax_writer(
             replica,
         )
 
-    return write
+    return after_earlier_routes(write)
 
 
 # ---------------------------------------------------------------------------
@@ -537,17 +541,6 @@ def incremental_distinct_apply(
         F.hll_sketch_agg("v", F.lit(lgk)),
         F.hll_union,
     )
-
-
-def incremental_distinct_writer(state_dir: str, group_key: str, value_field: str):
-    """foreachBatch hook: envelope stream → maintained NDV sketches."""
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        incremental_distinct_apply(
-            batch_df.sparkSession, batch_df, state_dir, group_key, value_field
-        )
-
-    return write
 
 
 def distinct_view(state: DataFrame) -> DataFrame:
@@ -784,17 +777,6 @@ def incremental_theta_apply(
         F.theta_sketch_agg("v"),
         F.theta_union,
     )
-
-
-def incremental_theta_writer(state_dir: str, group_key: str, value_field: str):
-    """foreachBatch hook: envelope stream → maintained Theta sketches."""
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        incremental_theta_apply(
-            batch_df.sparkSession, batch_df, state_dir, group_key, value_field
-        )
-
-    return write
 
 
 def theta_set_view(state: DataFrame, grp_a: str, grp_b: str) -> DataFrame:

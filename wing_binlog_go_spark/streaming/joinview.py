@@ -1155,41 +1155,3 @@ def compact_joinview_mor(
     })
     for seq, path in entries:
         shutil.rmtree(path, ignore_errors=True)
-
-
-def joinview_mor_writer(
-    state_dir: str,
-    left_table: str,
-    right_table: str,
-    key_left: str,
-    key_right: str,
-    pk_left: str | list[str] = "id",
-    pk_right: str | list[str] = "id",
-    num_buckets: int = 16,
-    compact_every: int = 0,
-):
-    """foreachBatch hook for the merge-on-read layout; with
-    ``compact_every`` > 0, folds the log into base whenever it reaches
-    that many entries (the read-cost reset, same cadence contract as
-    the CMS route's compaction)."""
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        incremental_joinview_apply_mor(
-            batch_df.sparkSession,
-            batch_df,
-            state_dir,
-            left_table,
-            right_table,
-            key_left,
-            key_right,
-            pk_left,
-            pk_right,
-            num_buckets,
-        )
-        if compact_every and len(_mor_entries(state_dir)) >= compact_every:
-            compact_joinview_mor(
-                batch_df.sparkSession, state_dir, key_left, key_right,
-                num_buckets,
-            )
-
-    return write

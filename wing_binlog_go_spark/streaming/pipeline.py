@@ -5,7 +5,9 @@ Reference architecture being re-expressed (jilieryuyi/wing-binlog-go):
 
 - fan-out multicast: every event to every registered service
   (handler.go:81-98) → ONE ``foreachBatch`` writing N routes, sharing the
-  checkpointed source so all sinks see identical batches (O13).
+  checkpointed source so all sinks see identical batches (O13); the
+  routes of a batch run concurrently, as each reference service sends
+  from its own goroutines (``route_batch``).
 - per-route regex filters (service/util.go:9-22, O12) → compiled
   ``rlike`` predicates per route.
 - checkpoint/restart: pos cache + O_SYNC (handler.go:216-260, O11) →
@@ -33,6 +35,7 @@ import os
 from dataclasses import dataclass, field
 from typing import Callable
 
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -97,9 +100,66 @@ class IndexState:
         return base
 
 
+_AFTER_EARLIER_ROUTES = "_after_earlier_routes"
+
+
+def after_earlier_routes(writer: Callable) -> Callable:
+    """Mark a route writer that reads what an earlier route of the same
+    batch committed (the SCD2 history, the upsert replica): it starts
+    only after every route listed before it has returned. Unmarked
+    routes of a batch run concurrently. The mark is an attribute, so a
+    wrapper made with ``functools.wraps`` keeps it."""
+    setattr(writer, _AFTER_EARLIER_ROUTES, True)
+    return writer
+
+
+def _run_concurrently(calls: list[tuple[Callable[[], None], bool]]) -> None:
+    """Run ``(call, after_earlier)`` pairs one thread each. A call
+    flagged ``after_earlier`` starts once every call before it has
+    returned, and not at all if one of them failed. Threads are
+    ``InheritableThread``s, so every Spark job still runs under the
+    stream thread's local properties (the query's job group). Returns
+    only when every started call has returned, then raises the first
+    failure in list order: no thread of a failed attempt is still
+    writing when the batch is replayed."""
+    errors: list[BaseException | None] = [None] * len(calls)
+    threads: list[InheritableThread] = []
+
+    def run(i: int, call: Callable[[], None]) -> None:
+        try:
+            call()
+        except BaseException as e:  # noqa: BLE001 - re-raised by the caller
+            errors[i] = e
+
+    for i, (call, after_earlier) in enumerate(calls):
+        if after_earlier:
+            for t in threads:
+                t.join()
+            if any(errors):
+                break
+        t = InheritableThread(target=run, args=(i, call))
+        t.start()
+        threads.append(t)
+    for t in threads:
+        t.join()
+    for e in errors:
+        if e is not None:
+            raise e
+
+
 def route_batch(env: DataFrame, routes: list[Route], batch_id: int) -> None:
-    for r in routes:
-        r.writer(env.filter(match_filters("full_table", r.filters)), batch_id)
+    """Write one batch to every route (see ``_run_concurrently``): each
+    route sees the batch through its own filters, and a route marked
+    ``after_earlier_routes`` sees what the routes before it committed."""
+    _run_concurrently([
+        (
+            lambda r=r: r.writer(
+                env.filter(match_filters("full_table", r.filters)), batch_id
+            ),
+            getattr(r.writer, _AFTER_EARLIER_ROUTES, False),
+        )
+        for r in routes
+    ])
 
 
 def run_pipeline(
@@ -277,6 +337,21 @@ def pk_str(*values) -> str:
     )
 
 
+def _change_events(env: DataFrame) -> DataFrame:
+    """The row-change envelopes of a batch (DDL events carry no row)."""
+    return env.filter(F.col("event_type").isin("insert", "update", "delete"))
+
+
+def _no_change_for(env: DataFrame, table_dir: str) -> bool:
+    """The empty-batch guard of the flat writers: ``table_dir`` exists
+    and the batch has no change rows for it. A multi-table route calls
+    a writer once per registered table per micro-batch, and a table
+    with no events must not pay a read-and-rewrite of its accumulated
+    state. Probes the envelopes (a limit-1 scan), not the merge input,
+    so the guard runs no shuffle."""
+    return os.path.exists(table_dir) and _change_events(env).isEmpty()
+
+
 def change_rows_per_pk(env: DataFrame, pk: str | list[str] = "id") -> DataFrame:
     """Every change event keyed by primary key: one row per
     insert/update/delete envelope → (_pk, row, is_delete, event_index).
@@ -297,7 +372,7 @@ def change_rows_per_pk(env: DataFrame, pk: str | list[str] = "id") -> DataFrame:
         .otherwise(F.col("event.data"))  # delete: the removed row
     )
     key = _pk_key(img, pk_cols)
-    changes = env.filter(F.col("event_type").isin("insert", "update", "delete"))
+    changes = _change_events(env)
     rows = changes.select(
         key.alias("_pk"),
         img.alias("row"),
@@ -350,7 +425,8 @@ def _lww_merge(updates: DataFrame, table_dir: str) -> DataFrame:
     the stored rows at ``table_dir`` (if any) ∪ the batch's winners,
     collapsed last-writer-wins, tombstones dropped."""
     if os.path.exists(table_dir):
-        current = updates.sparkSession.read.parquet(table_dir)
+        # the stored schema is the batch's: no schema-inference job
+        current = updates.sparkSession.read.schema(updates.schema).parquet(table_dir)
         updates = _collapse_lww(
             current.select("_pk", "row", "is_delete", "event_index").unionByName(
                 updates
@@ -370,14 +446,9 @@ def upsert_parquet(
     NOT MATCHED INSERT`` — same keys, same winner rule.
     """
     recover_swap(target_dir)
-    updates = latest_image_per_pk(env, pk)
-    # empty-batch short-circuit: a multi-table replica route calls this
-    # once per registered table per micro-batch, and a table with no
-    # events must not pay a full read-and-rewrite of its accumulated
-    # replica (the scd2 writer's growth guard, applied here too)
-    if os.path.exists(target_dir) and updates.isEmpty():
+    if _no_change_for(env, target_dir):
         return
-    rewrite_dir(target_dir, _lww_merge(updates, target_dir))
+    rewrite_dir(target_dir, _lww_merge(latest_image_per_pk(env, pk), target_dir))
 
 
 def _scd2_rows(env: DataFrame, pk: str | list[str]) -> DataFrame:
@@ -418,13 +489,9 @@ def scd2_upsert_parquet(
     additionally tier them into append-only closed-history partitions.
     """
     recover_swap(target_dir)
-    fresh = _scd2_rows(env, pk)
-    # An empty batch subset (a multi-table route where this table saw no
-    # events) must not re-read and rewrite the whole accumulated history
-    # — that cost grows unboundedly with history size for zero benefit.
-    if os.path.exists(target_dir) and fresh.isEmpty():
+    if _no_change_for(env, target_dir):
         return
-    rewrite_dir(target_dir, _scd2_merge(fresh, target_dir))
+    rewrite_dir(target_dir, _scd2_merge(_scd2_rows(env, pk), target_dir))
 
 
 def _scd2_merge(fresh: DataFrame, table_dir: str) -> DataFrame:
@@ -444,7 +511,7 @@ def _scd2_merge(fresh: DataFrame, table_dir: str) -> DataFrame:
     merged = fresh
     if os.path.exists(table_dir):
         merged = (
-            fresh.sparkSession.read.parquet(table_dir)
+            fresh.sparkSession.read.schema(fresh.schema).parquet(table_dir)
             .select("_pk", "row", "is_delete", "valid_from_index")
             .unionByName(fresh)
         )

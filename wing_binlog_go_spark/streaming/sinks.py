@@ -33,6 +33,13 @@ from pyspark.sql import functions as F
 
 from wing_binlog_go_spark.functions.envelope import envelope_json
 from wing_binlog_go_spark.streaming.maintenance import write_json
+from wing_binlog_go_spark.streaming.pipeline import (
+    _run_concurrently,
+    after_earlier_routes,
+    scd2_upsert_parquet,
+    scd2_upsert_parquet_bucketed,
+    upsert_parquet,
+)
 
 
 def parquet_route_writer(out_dir: str) -> Callable[[DataFrame, int], None]:
@@ -203,25 +210,34 @@ def typed_replica_writer(
     """The reference's headline use case — MySQL → queryable replica
     (readme.md:40-41 "data synchronization to NoSQL/search") — as one
     route: upsert each registered table into its own parquet table keyed
-    on the registry's PK. State stays in envelope-map form (one merge
+    on the registry's PK, the tables side by side. State stays in envelope-map form (one merge
     code path); ``read_typed_replica`` decodes to typed columns at read.
     """
-    import os
-
-    from wing_binlog_go_spark.streaming.pipeline import upsert_parquet
 
     def write(env: DataFrame, batch_id: int) -> None:
-        for full in table_full_names:
-            spec = registry.get(full)
-            if spec is None or not spec.pk_columns:
-                continue
-            subset = env.filter(env.full_table == full)
-            target = os.path.join(base_dir, full.replace(".", "__"))
-            # full PK list: composite keys must not collapse onto the
-            # first column
-            upsert_parquet(subset, target, pk=spec.pk_columns)
+        _upsert_tables(env, registry, table_full_names, base_dir, upsert_parquet)
 
     return write
+
+
+def _upsert_tables(env, registry, table_full_names, base_dir, upsert) -> None:
+    """``upsert(table's envelopes, table dir, pk=table's PK columns)``
+    for every registered table with a PK, the tables side by side
+    (``pipeline._run_concurrently``): each owns its own directory."""
+    calls = []
+    for full in table_full_names:
+        spec = registry.get(full)
+        if spec is None or not spec.pk_columns:
+            continue
+        subset = env.filter(env.full_table == full)
+        target = os.path.join(base_dir, full.replace(".", "__"))
+        # full PK list: composite keys must not collapse onto the first
+        # column
+        calls.append((
+            lambda s=subset, t=target, pk=spec.pk_columns: upsert(s, t, pk=pk),
+            False,
+        ))
+    _run_concurrently(calls)
 
 
 def read_typed_replica(spark, registry, full_name: str, base_dir: str) -> DataFrame:
@@ -260,26 +276,16 @@ def scd2_history_writer(
     (``scd2_upsert_parquet_bucketed``): per-batch IO becomes O(changed
     buckets' history) instead of a full-history rewrite — the r5
     ADVICE scale form for long-lived history tables."""
-    import os
+    from functools import partial
 
-    from wing_binlog_go_spark.streaming.pipeline import (
-        scd2_upsert_parquet,
-        scd2_upsert_parquet_bucketed,
+    upsert = (
+        partial(scd2_upsert_parquet_bucketed, num_buckets=num_buckets)
+        if num_buckets
+        else scd2_upsert_parquet
     )
 
     def write(env: DataFrame, batch_id: int) -> None:
-        for full in table_full_names:
-            spec = registry.get(full)
-            if spec is None or not spec.pk_columns:
-                continue
-            subset = env.filter(env.full_table == full)
-            target = os.path.join(base_dir, full.replace(".", "__"))
-            if num_buckets:
-                scd2_upsert_parquet_bucketed(
-                    subset, target, pk=spec.pk_columns, num_buckets=num_buckets
-                )
-            else:
-                scd2_upsert_parquet(subset, target, pk=spec.pk_columns)
+        _upsert_tables(env, registry, table_full_names, base_dir, upsert)
 
     return write
 
@@ -742,9 +748,11 @@ def pit_enrich_writer(
     downstream; ours composes it from the SCD2 materializer + q115's
     interval probe, `plans/extra_queries.py::q115`).
 
-    Run AFTER an ``scd2_history_writer`` route for ``dim_table`` in the
-    same pipeline (routes run in list order, the same in-batch ordering
-    contract the MIN/MAX maintainer uses): the dimension change at
+    List it AFTER an ``scd2_history_writer`` route for ``dim_table`` in
+    the same pipeline. Routes of a batch run concurrently, but this
+    writer is marked ``after_earlier_routes`` (the same in-batch
+    ordering contract the MIN/MAX maintainer uses), so it starts only
+    once every route before it has committed: the dimension change at
     event_index i is then visible to a fact at index j > i within the
     SAME micro-batch. The probe is an equi-join on the dimension key
     with the half-open [valid_from_index, valid_to_index) interval as a
@@ -804,7 +812,7 @@ def pit_enrich_writer(
         os.makedirs(out_dir, exist_ok=True)
         enriched.write.mode("append").parquet(out_dir)
 
-    return write
+    return after_earlier_routes(write)
 
 
 def read_pit_enriched(spark, out_dir: str) -> DataFrame:

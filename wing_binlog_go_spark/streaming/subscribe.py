@@ -38,7 +38,6 @@ binlog order (O10/O19).
 
 from __future__ import annotations
 
-import json
 import logging
 import queue
 import re
@@ -603,18 +602,3 @@ class ControlTcpServer:
     def close(self) -> None:
         self._closed = True
         self._listener.close()
-
-
-def control_members_json(control_plane) -> str:
-    """SHOW_MEMBERS payload: JSON inventory of streaming queries (the
-    reference prints a member table; JSON is the structured analog)."""
-    return json.dumps(
-        [
-            {
-                "id": m.id,
-                "name": m.name,
-                "is_active": m.is_active,
-            }
-            for m in control_plane.members()
-        ]
-    )

@@ -37,26 +37,6 @@ def tumbling_counts(
     )
 
 
-def sliding_counts(
-    df: DataFrame,
-    ts_col: str = "ts",
-    window: str = "10 minutes",
-    slide: str = "5 minutes",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """S2: sliding-window aggregation."""
-    return (
-        df.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window, slide).alias("win"))
-        .agg(F.count("*").alias("cnt"))
-        .select(
-            F.col("win.start").alias("win_start"),
-            F.col("win.end").alias("win_end"),
-            "cnt",
-        )
-    )
-
-
 def session_counts(
     df: DataFrame,
     ts_col: str = "ts",

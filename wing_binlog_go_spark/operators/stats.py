@@ -923,74 +923,68 @@ def qdigest_compress(
     for each depth bottom-up, a parent family (left child + right
     child + parent) whose total fits under floor(n/k) collapses into
     the parent. Works on raw leaf counts (build) and on a union of
-    digests (merge) alike. Each level is one groupBy + two anti-joins
-    over a frame bounded by the DIGEST size (≤ distinct values), with
-    a lineage cut per level — ``bits`` bounded driver iterations, the
+    digests (merge) alike. Each level is one window pass over a frame
+    bounded by the DIGEST size (≤ distinct values): the level's nodes
+    are keyed by their parent id and every other node by its own id,
+    so a family shares one window partition and needs no join. A
+    lineage cut per level — ``bits`` bounded driver iterations, the
     documented bounded-iteration class (BPE/GD/PageRank).
 
     With ``group_col`` one INDEPENDENT digest per group value is
     maintained in the same frames ("p99 per event type over 100 TB in
     one pass"): the merge threshold is per-group floor(n_g/k), carried
-    as a broadcast-joined column rather than a collected scalar, and
-    every per-level key gains the group — same level count, same
-    shuffle count, regardless of how many groups ride along."""
+    as a column rather than a collected scalar (merges conserve counts,
+    so it is the same at every level), and every per-level key gains
+    the group — same level count, same job count, regardless of how
+    many groups ride along."""
     grp = group_col or "_g"
     if group_col is None:
         nodes = nodes.withColumn("_g", F.lit(0))
-    thresholds = nodes.groupBy(grp).agg(
-        F.floor(F.sum("cnt") / k).cast("long").alias("_t")
-    ).localCheckpoint(eager=True)  # totals are level-invariant; compute once
+    cols = nodes.columns
+    nodes = nodes.withColumn(
+        "_t", F.floor(F.sum("cnt").over(Window.partitionBy(grp)) / k).cast("long")
+    )
+    fam = Window.partitionBy(grp, "_key")
     for depth in range(bits, 0, -1):
         lo, hi = 1 << depth, 1 << (depth + 1)
-        in_level = (F.col("id") >= lo) & (F.col("id") < hi)
-        cur = nodes.filter(in_level)
-        rest = nodes.filter(~in_level)
-        fam = cur.groupBy(
-            grp, F.floor(F.col("id") / 2).cast("long").alias("pid")
-        ).agg(F.sum("cnt").alias("csum"))
-        dec = (
-            fam.join(
-                rest.select(
-                    grp, F.col("id").alias("pid"), F.col("cnt").alias("pcnt")
-                ),
-                [grp, "pid"],
-                "left",
-            )
-            .fillna(0, subset=["pcnt"])
-            .withColumn("newcnt", F.col("csum") + F.col("pcnt"))
-            .join(F.broadcast(thresholds), grp)
-            .withColumn("do_merge", F.col("newcnt") <= F.col("_t"))
+        child = (F.col("id") >= lo) & (F.col("id") < hi)
+        keyed = nodes.withColumn("_child", child).withColumn(
+            "_key",
+            F.when(child, F.floor(F.col("id") / 2).cast("long")).otherwise(
+                F.col("id")
+            ),
         )
-        merged = dec.filter("do_merge").select(
-            grp, F.col("pid").alias("id"), F.col("newcnt").alias("cnt")
+        keyed = keyed.select(
+            "*",
+            F.sum("cnt").over(fam).alias("_newcnt"),
+            F.count(F.when(F.col("_child"), 1)).over(fam).alias("_nchild"),
+            F.count(F.when(~F.col("_child"), 1)).over(fam).alias("_nparent"),
+            F.min(F.when(F.col("_child"), F.col("id"))).over(fam).alias("_first"),
         )
-        merged_pids = dec.filter("do_merge").select(grp, "pid")
+        merge = (F.col("_nchild") > 0) & (F.col("_newcnt") <= F.col("_t"))
+        # a merged family leaves one row: the parent's own row if it
+        # has one, else its first child's, re-keyed to the parent
+        keep = (
+            ~F.col("_child")
+            | ~merge
+            | ((F.col("_nparent") == 0) & (F.col("id") == F.col("_first")))
+        )
+        out = {
+            "id": F.when(merge, F.col("_key")).otherwise(F.col("id")),
+            "cnt": F.when(merge, F.col("_newcnt")).otherwise(F.col("cnt")),
+        }
         nodes = (
-            rest.join(
-                merged_pids.withColumnRenamed("pid", "id"),
-                [grp, "id"],
-                "left_anti",
-            )
-            .unionByName(
-                cur.withColumn(
-                    "_pid", F.floor(F.col("id") / 2).cast("long")
-                )
-                .join(
-                    merged_pids.withColumnRenamed("pid", "_pid"),
-                    [grp, "_pid"],
-                    "left_anti",
-                )
-                .drop("_pid")
-            )
-            .unionByName(merged)
+            keyed.filter(keep)
+            .select(*[out[c].alias(c) if c in out else c for c in cols], "_t")
             # the frame is UNIVERSE-bounded (≤ #groups · 2^(bits+1)
             # node ids, no matter how many raw rows fed the leaves), so
-            # collapsing the union's accumulated partitioning is safe
-            # by design — without it each level's checkpoint
-            # materializes hundreds of near-empty shuffle partitions
+            # collapsing it to one partition is safe by design — without
+            # it each level's checkpoint materializes hundreds of
+            # near-empty shuffle partitions
             .coalesce(1)
             .localCheckpoint(eager=True)  # bits levels of lineage
         )
+    nodes = nodes.drop("_t")
     return nodes.drop("_g") if group_col is None else nodes
 
 

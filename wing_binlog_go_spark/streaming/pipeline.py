@@ -114,14 +114,15 @@ def after_earlier_routes(writer: Callable) -> Callable:
 
 
 def _run_concurrently(calls: list[tuple[Callable[[], None], bool]]) -> None:
-    """Run ``(call, after_earlier)`` pairs one thread each. A call
-    flagged ``after_earlier`` starts once every call before it has
-    returned, and not at all if one of them failed. Threads are
-    ``InheritableThread``s, so every Spark job still runs under the
-    stream thread's local properties (the query's job group). Returns
-    only when every started call has returned, then raises the first
-    failure in list order: no thread of a failed attempt is still
-    writing when the batch is replayed."""
+    """Run ``(call, after_earlier)`` pairs one thread each, except the
+    last call, which runs in the calling thread (so a single call starts
+    no thread at all). A call flagged ``after_earlier`` starts once
+    every call before it has returned, and not at all if one of them
+    failed. Threads are ``InheritableThread``s, so every Spark job still
+    runs under the stream thread's local properties (the query's job
+    group). Returns only when every started call has returned, then
+    raises the first failure in list order: no thread of a failed
+    attempt is still writing when the batch is replayed."""
     errors: list[BaseException | None] = [None] * len(calls)
     threads: list[InheritableThread] = []
 
@@ -137,9 +138,12 @@ def _run_concurrently(calls: list[tuple[Callable[[], None], bool]]) -> None:
                 t.join()
             if any(errors):
                 break
-        t = InheritableThread(target=run, args=(i, call))
-        t.start()
-        threads.append(t)
+        if i == len(calls) - 1:
+            run(i, call)
+        else:
+            t = InheritableThread(target=run, args=(i, call))
+            t.start()
+            threads.append(t)
     for t in threads:
         t.join()
     for e in errors:

@@ -398,6 +398,42 @@ def test_null_payload_yields_null_features(spark):
     assert audio[1].rms is None
 
 
+def test_image_phash_exact_beside_null_payload_in_one_batch(spark):
+    """A NULL payload in the same Arrow batch as real ones must not make
+    the phash column float64: every hash reaches Spark bit for bit (a
+    float keeps 53 bits of a 64-bit hash)."""
+    payload = bytes([1, 2, 3])
+    rows = [(1, None, ("image/png", 1, 1, None)),
+            (2, payload, ("image/png", 1, 1, None))]
+    df = spark.createDataFrame(rows, MEDIA_SCHEMA).coalesce(1)  # one batch
+    phashes = {r.media_id: r.phash for r in image_features(df).collect()}
+    assert phashes == {1: None, 2: fake_decode_image(payload)["phash"]}
+
+
+def test_phash_near_dup_recall_beside_null_payload_in_one_batch(spark):
+    """Two hashes one low bit apart, sharing an Arrow batch with a NULL
+    payload, must pair at Hamming distance exactly 1 — rounded to a
+    float's 53-bit mantissa they would lose that bit."""
+    from wing_binlog_go_spark.multimodal import phash_near_dup_pairs
+
+    planted = {1: 0x5A5A_5A5A_5A5A_5A5B, 2: 0x5A5A_5A5A_5A5A_5A5A}
+
+    def stub_decoder(payload):
+        if payload is None:
+            return {"n_bytes": None, "mean_byte": None, "phash": None}
+        mid = int.from_bytes(payload, "big")
+        return {"n_bytes": len(payload), "mean_byte": 0.0, "phash": planted[mid]}
+
+    rows = [(mid, mid.to_bytes(4, "big"), ("image/png", 8, 8, None)) for mid in planted]
+    rows.append((3, None, ("image/png", 8, 8, None)))
+    df = spark.createDataFrame(rows, MEDIA_SCHEMA).coalesce(1)  # one batch
+    pairs = {
+        (r.media_a, r.media_b): r.hamming
+        for r in phash_near_dup_pairs(df, batch_decoder=stub_decoder).collect()
+    }
+    assert pairs == {(1, 2): 1}
+
+
 def test_negative_duration_frame_sample(spark):
     rows = [(9, b"x", ("video/mp4", 1, 1, -500))]
     df = spark.createDataFrame(rows, MEDIA_SCHEMA)
@@ -789,6 +825,37 @@ def test_audio_near_dup_pairs_on_real_wav_bytes(spark):
     }
     assert expected <= set(pairs), f"missed planted pairs: {expected - set(pairs)}"
     assert not (set(pairs) - expected), f"false pairs: {set(pairs) - expected}"
+
+
+def test_audio_fingerprints_exact_beside_null_payload_in_one_batch(spark):
+    """The fingerprints audio_near_dup_pairs joins on are exactly
+    real_audio_fingerprint's, also when a NULL payload shares their
+    Arrow batch. Each clip gets a probe row whose fingerprint is the
+    clip's driver-side value with bit 0 flipped: the pair must come
+    back at Hamming distance exactly 1, which hashes rounded to a
+    float's 53-bit mantissa (low bits lost) do not give."""
+    from wing_binlog_go_spark.multimodal import (
+        audio_near_dup_pairs,
+        real_audio_fingerprint,
+    )
+
+    wavs = {i: encode_wav(_rich_audio(i * 7 + 1)) for i in range(3)}
+    probes = {b"probe%d" % i: real_audio_fingerprint(w) ^ 1 for i, w in wavs.items()}
+
+    def fingerprint(payload):
+        if payload is not None and bytes(payload) in probes:
+            return probes[bytes(payload)]
+        return real_audio_fingerprint(payload)
+
+    rows = [(i, w, ("audio/wav", None, None, 1000)) for i, w in wavs.items()]
+    rows += [(i + 200, b"probe%d" % i, ("audio/wav", None, None, 1000)) for i in wavs]
+    rows.append((500, None, ("audio/wav", None, None, None)))  # NULL payload
+    df = spark.createDataFrame(rows, MEDIA_SCHEMA).coalesce(1)  # one batch
+    pairs = {
+        (r.media_a, r.media_b): r.hamming
+        for r in audio_near_dup_pairs(df, max_hamming=8, fingerprint=fingerprint).collect()
+    }
+    assert pairs == {(i, i + 200): 1 for i in wavs}
 
 
 # ---------------------------------------------------------------------------

@@ -144,7 +144,8 @@ def image_features(df: DataFrame, batch_decoder=fake_decode_image) -> DataFrame:
                     "media_id": pdf["media_id"],
                     "n_bytes": [f["n_bytes"] for f in feats],
                     "mean_byte": [f["mean_byte"] for f in feats],
-                    "phash": [f["phash"] for f in feats],
+                    # Int64: a NULL makes a plain column float64, which cannot hold a 64-bit hash
+                    "phash": pd.array([f["phash"] for f in feats], dtype="Int64"),
                 }
             )
 
@@ -309,7 +310,8 @@ def audio_near_dup_pairs(
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            fps = [fingerprint(p) for p in pdf["payload"]]
+            # Int64: a NULL makes a plain column float64, which cannot hold a 64-bit hash
+            fps = pd.array([fingerprint(p) for p in pdf["payload"]], dtype="Int64")
             yield pd.DataFrame({"media_id": pdf["media_id"], "fp": fps})
 
     feats = (

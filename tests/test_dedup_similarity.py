@@ -2142,6 +2142,57 @@ def test_ivfpq_delete_interrupted_swap_is_restored(spark, sf_small, tmp_path):
             .select("vec_id").collect()} == full - set(victims)
 
 
+def test_ivfpq_delete_interrupted_current_swap_is_restored(
+    spark, sf_small, tmp_path
+):
+    """The same crash window under the current partition swap
+    (``maintenance.rewrite_dir``): a crash between ``swap_dir``'s
+    renames leaves the list only at its hidden ``backup_path``, which
+    partition discovery skips. Both healers restore it — the next
+    incremental apply (so its ids are not re-appended as fresh) and the
+    delete itself."""
+    import os
+
+    from wing_binlog_go_spark.operators.similarity import (
+        incremental_ivfpq_index_apply,
+        ivfpq_index_delete,
+    )
+    from wing_binlog_go_spark.streaming.maintenance import backup_path
+
+    emb = (
+        read_table(spark, sf_small, "embeddings")
+        .select("vec_id", "embedding")
+        .limit(60)
+    )
+    istore = str(tmp_path / "ivfpq")
+    incremental_ivfpq_index_apply(
+        spark, emb, istore, n_centroids=4, m=4, n_codes=4
+    )
+    codes_dir = os.path.join(istore, "codes")
+    full = {r.vec_id for r in spark.read.parquet(codes_dir)
+            .select("vec_id").collect()}
+    lst = int(
+        spark.read.parquet(codes_dir).select("_list").first()._list
+    )
+    final = os.path.join(codes_dir, f"_list={lst}")
+    os.rename(final, backup_path(final))
+
+    st = incremental_ivfpq_index_apply(
+        spark, emb, istore, n_centroids=4, m=4, n_codes=4
+    )
+    assert st["appended"] == 0 and st["replayed"] == st["batch"]
+    assert not os.path.exists(backup_path(final))
+    assert {r.vec_id for r in spark.read.parquet(codes_dir)
+            .select("vec_id").collect()} == full
+
+    os.rename(final, backup_path(final))
+    victims = [r.vec_id for r in emb.orderBy("vec_id").limit(5).collect()]
+    st2 = ivfpq_index_delete(spark, istore, victims)
+    assert st2["deleted_ids"] == 5
+    assert {r.vec_id for r in spark.read.parquet(codes_dir)
+            .select("vec_id").collect()} == full - set(victims)
+
+
 def test_corpus_store_deletes(spark, sf_small, tmp_path):
     """dedup_corpus_delete (flat MinHash store) and
     semantic_corpus_delete (cluster-partitioned vector store): deleted

@@ -2,6 +2,10 @@
 
 from __future__ import annotations
 
+import os
+
+import pytest
+
 from wing_binlog_go_spark.streaming.maintenance import (
     compact_parquet,
     parquet_file_count,
@@ -335,6 +339,7 @@ def test_cms_route_crash_mid_commit_is_retried_not_skipped(spark, tmp_path):
     import json as _json
 
     from wing_binlog_go_spark.operators.stats import cms_build
+    from wing_binlog_go_spark.streaming.maintenance import staging_path
     from wing_binlog_go_spark.streaming.pipeline import Route, run_pipeline
     from wing_binlog_go_spark.streaming.sinks import (
         cms_sketch_writer,
@@ -362,9 +367,10 @@ def test_cms_route_crash_mid_commit_is_retried_not_skipped(spark, tmp_path):
     # Simulate the crash: batch key 1's parquet job died mid-write.
     # Under the pre-fix layout these files would have lived in the
     # committed bkey=1 path and the replay probe would skip the batch.
-    crashed = store / "_staging" / "bkey=1"
-    crashed.mkdir(parents=True)
-    (crashed / "part-00000.parquet").write_bytes(b"torn parquet bytes")
+    crashed = staging_path(str(store / "bkey=1"))
+    os.makedirs(crashed)
+    with open(os.path.join(crashed, "part-00000.parquet"), "wb") as f:
+        f.write(b"torn parquet bytes")
 
     route = Route(
         "sketch",
@@ -467,6 +473,20 @@ def test_misra_gries_guarantees(spark, sf_small):
     for tok, true in exact.items():
         if true > bound:
             assert tok in est, (tok, true, bound)  # heavy => present
+
+
+def test_misra_gries_counts_exact_bigints_beside_null(spark):
+    """A nullable bigint column reaches the per-partition pass as exact
+    values: 2^60+1 is not rounded to 2^60 when a NULL shares its
+    partition, and the NULL rows count as one item."""
+    from wing_binlog_go_spark.operators.stats import misra_gries_topk
+
+    big = 2**60 + 1
+    df = spark.createDataFrame(
+        [(big,), (big,), (None,), (7,)], "x bigint"
+    ).coalesce(1)
+    est = {r.item: r.est for r in misra_gries_topk(df, "x", k=4).collect()}
+    assert est == {big: 2, None: 1, 7: 1}
 
 
 def test_mg_route_end_to_end(spark, tmp_path):
@@ -1616,6 +1636,95 @@ def test_sketch_writers_single_probe_action_per_batch(spark, tmp_path, monkeypat
 # ---------------------------------------------------------------------------
 
 
+@pytest.mark.parametrize(
+    "writer",
+    [
+        "curation_stats_writer",
+        "cms_sketch_writer",
+        "mg_sketch_writer",
+        "kmv_sketch_writer",
+        "qdigest_sketch_writer",
+        "drift_monitor_writer",
+    ],
+)
+def test_batch_keyed_writers_refuse_uri_store_dirs(writer):
+    """The batch-keyed writers probe and publish with os-level calls, so
+    an object-store URI would silently disable replay detection: each
+    refuses one when it is built."""
+    from wing_binlog_go_spark.streaming import sinks
+
+    with pytest.raises(ValueError, match="POSIX path"):
+        getattr(sinks, writer)("s3://bucket/store", "crawl.documents")
+
+
+def test_curation_stats_torn_stage_is_rewritten_once(spark, tmp_path):
+    """A crash that left a torn stage behind (files in the hidden
+    ``staging_path`` sibling, no ``batch_id=0`` partition) does not read
+    as committed: the replayed batch writes its stats row once, the
+    debris is gone, and a second replay changes nothing."""
+    from wing_binlog_go_spark.streaming.maintenance import staging_path
+    from wing_binlog_go_spark.streaming.sinks import (
+        curation_stats_writer,
+        read_curation_stats,
+    )
+
+    stats_dir = str(tmp_path / "stats")
+    torn = staging_path(os.path.join(stats_dir, "batch_id=0"))
+    os.makedirs(torn)
+    with open(os.path.join(torn, "part-00000.parquet"), "wb") as f:
+        f.write(b"torn parquet bytes")
+
+    env = _env_batch(spark, [
+        ("insert", 1, {"id": "1", "text": "alpha beta"}),
+        ("insert", 2, {"id": "2", "text": "beta gamma"}),
+    ])
+    w = curation_stats_writer(stats_dir, "crawl.documents")
+    w(env, 0)
+    w(env, 0)  # replay: the published partition is the commit marker
+    rows = read_curation_stats(spark, stats_dir).collect()
+    assert [(r.batch_id, r.n_docs) for r in rows] == [(0, 2)]
+    assert not os.path.exists(torn)
+    assert sorted(os.listdir(stats_dir)) == ["batch_id=0"]
+
+
+def test_dead_letter_replay_leaves_one_copy(spark, tmp_path):
+    """A dead-letter batch replayed under a fresh checkpoint (the crash
+    between the sink writes and the offset commit) replaces its
+    ``batch_id=K`` partition whole: one copy of each bad record, and no
+    stage or backup left beside it."""
+    import json as _json
+
+    from wing_binlog_go_spark.streaming.pipeline import Route, run_pipeline
+
+    log_dir = tmp_path / "log"
+    log_dir.mkdir()
+    good = {
+        "binlog_file": "mysql-bin.000001", "binlog_pos": 4,
+        "xid_commit": True, "database": "d", "table": "t",
+        "action": "insert", "row_no": 0, "before": None,
+        "after": {"id": "1"}, "ddl_query": None,
+        "ts_header": "2018-04-19T05:21:27.000Z", "gtid": None,
+    }
+    with open(log_dir / "f.jsonl", "w") as f:
+        f.write(_json.dumps(good) + "\n")
+        f.write("this is not json at all\n")
+        f.write(_json.dumps({**good, "binlog_pos": 8, "action": "truncate"}) + "\n")
+
+    dlq = str(tmp_path / "dlq")
+    for ckpt in ("ckpt", "ckpt2"):
+        q = run_pipeline(
+            spark, str(log_dir), [Route("rec", lambda env, bid: None)],
+            str(tmp_path / ckpt), dead_letter_dir=dlq,
+        )
+        await_done(q)
+        spark.catalog.refreshByPath(dlq)
+        dead = spark.read.parquet(dlq)
+        assert sorted((r.action or "") for r in dead.collect()) == [
+            "", "truncate",
+        ]
+    assert sorted(os.listdir(dlq)) == ["batch_id=0"]
+
+
 def test_rewrite_dir_failed_write_keeps_old_table_then_recovers(spark, tmp_path):
     """A write that raises mid-rewrite leaves the old table readable and
     its half-written stage as debris; the next rewrite succeeds over it
@@ -1706,10 +1815,10 @@ def test_rewrite_dir_of_one_bucket_adds_no_partition(spark, tmp_path):
 
 
 def test_commit_protocol_is_called_only_from_maintenance():
-    """``swap_dir``, ``os.fsync`` and ``os.replace`` are called only in
-    ``streaming/maintenance.py``: every other module commits through its
-    primitives. The lease, service-registry and append-only binlog
-    bridge files keep their own file protocols."""
+    """``swap_dir``, ``os.fsync``, ``os.replace`` and ``os.rename`` are
+    called only in ``streaming/maintenance.py``: every other module
+    commits through its primitives. The lease, service-registry and
+    append-only binlog bridge files keep their own file protocols."""
     import ast
     import pathlib
 
@@ -1731,7 +1840,7 @@ def test_commit_protocol_is_called_only_from_maintenance():
                 fn_names |= {
                     a.asname or a.name
                     for a in node.names
-                    if a.name in ("fsync", "replace")
+                    if a.name in ("fsync", "replace", "rename")
                 }
         hits = []
         for node in ast.walk(tree):
@@ -1743,7 +1852,7 @@ def test_commit_protocol_is_called_only_from_maintenance():
             elif isinstance(f, ast.Attribute) and (
                 f.attr == "swap_dir"
                 or (
-                    f.attr in ("fsync", "replace")
+                    f.attr in ("fsync", "replace", "rename")
                     and isinstance(f.value, ast.Name)
                     and f.value.id in os_names
                 )

@@ -836,15 +836,19 @@ def incremental_ivfpq_index_apply(
     accumulates. Returns {"batch": n, "replayed": r, "appended": a}."""
     import os as _os
 
+    from wing_binlog_go_spark.streaming.maintenance import (
+        recover_source_partition_swaps,
+    )
+
     # in-batch id dedup (see incremental_pq_index_apply)
     new_vectors = new_vectors.dropDuplicates([id_col])
 
     codes_dir = _os.path.join(store_dir, "codes")
     # heal an ivfpq_index_delete interrupted mid-partition-swap before
-    # probing ids (a retired-but-never-promoted list would otherwise
-    # read as absent and its ids would re-append as "fresh")
+    # probing ids (a list lost between the swap's renames would
+    # otherwise read as absent and its ids would re-append as "fresh")
     if _os.path.isdir(codes_dir):
-        _recover_partition_swaps(codes_dir)
+        recover_source_partition_swaps(codes_dir)
         spark.catalog.refreshByPath(codes_dir)
     if _ivfpq_meta_path(store_dir) is not None:
         _, coarse, books = load_ivfpq_index(spark, store_dir)
@@ -955,35 +959,6 @@ def pq_index_delete(
     return {"deleted_ids": n}
 
 
-def _recover_partition_swaps(data_dir: str) -> None:
-    """Heal an interrupted per-partition swap (:func:`ivfpq_index_delete`,
-    :func:`semantic_corpus_delete`): a ``_staging/<part>.old`` whose
-    live partition is ABSENT is the pre-delete copy retired by the
-    first rename of a swap that never finished — restore it (re-running
-    the delete then redoes the anti-join); one whose live partition
-    exists is completed-swap debris — discard, along with any leftover
-    stage dirs. Unlike the kNN edge partitions (pure functions of
-    vectors/), these partitions are SOURCE data: losing a partition's
-    untouched rows to a crash window is not recoverable by a rebuild,
-    hence the explicit restore."""
-    import os as _os
-    import shutil as _shutil
-
-    staging = _os.path.join(data_dir, "_staging")
-    if not _os.path.isdir(staging):
-        return
-    for name in sorted(_os.listdir(staging)):
-        path = _os.path.join(staging, name)
-        if name.endswith(".old"):
-            final = _os.path.join(data_dir, name[: -len(".old")])
-            if _os.path.isdir(final):
-                _shutil.rmtree(path)  # completed swap: debris
-            else:
-                _os.rename(path, final)  # interrupted swap: restore
-        else:
-            _shutil.rmtree(path)  # half-written stage: discard
-
-
 def ivfpq_index_delete(
     spark: SparkSession,
     store_dir: str,
@@ -992,17 +967,21 @@ def ivfpq_index_delete(
 ) -> dict:
     """OFFLINE retraction for the LIST-PARTITIONED IVF-PQ store — the
     bounded-IO form: only the inverted-list partitions that actually
-    contain the ids are rewritten (stage → retire → promote per
-    partition, the kNN edge-swap dance plus an explicit
-    ``_recover_partition_swaps`` restore because codes are source data, not
-    a rebuildable function). A list left empty loses its partition.
-    The embedded ``_quantizers.json`` rides in the codes dir root and
-    is untouched. Idempotent. Returns {"deleted_ids": n,
+    contain the ids are rewritten (one ``rewrite_dir`` per partition,
+    like the kNN edge swap, plus an explicit
+    ``recover_source_partition_swaps`` restore because codes are source
+    data, not a rebuildable function). A list left empty loses its
+    partition. The embedded ``_quantizers.json`` rides in the codes dir
+    root and is untouched. Idempotent. Returns {"deleted_ids": n,
     "lists_rewritten": [...]}."""
     import os as _os
 
+    from wing_binlog_go_spark.streaming.maintenance import (
+        recover_source_partition_swaps,
+    )
+
     codes_dir = _os.path.join(store_dir, "codes")
-    _recover_partition_swaps(codes_dir)
+    recover_source_partition_swaps(codes_dir)
     if isinstance(ids, DataFrame):
         ids_df = ids.select(F.col(ids.columns[0]).alias(id_col))
     else:
@@ -1038,12 +1017,14 @@ def _rewrite_partitions_minus_ids(
 ) -> None:
     """Rewrite each touched ``part_col=value`` partition of ``data_dir``
     minus ``ids_df``'s ids — the bounded-IO retraction core shared by
-    the IVF-PQ index and the semantic corpus: stage → retire → promote
-    per partition under the :func:`_recover_partition_swaps` restore
-    contract; a partition left empty is removed; the listing cache is
-    refreshed at the end (the renames bypass it)."""
+    the IVF-PQ index and the semantic corpus: one ``rewrite_dir`` per
+    partition, restorable by ``recover_source_partition_swaps``; a
+    partition left empty is removed; the listing cache is refreshed at
+    the end (the renames bypass it)."""
     import os as _os
     import shutil as _shutil
+
+    from wing_binlog_go_spark.streaming.maintenance import rewrite_dir
 
     for p in sorted(touched):
         keep = (
@@ -1053,23 +1034,11 @@ def _rewrite_partitions_minus_ids(
             .drop(part_col)
             .localCheckpoint(eager=True)  # read fully BEFORE the swap
         )
-        stage = _os.path.join(data_dir, "_staging", f"{part_col}={p}")
-        old = _os.path.join(data_dir, "_staging", f"{part_col}={p}.old")
         final = _os.path.join(data_dir, f"{part_col}={p}")
-        for leftover in (stage, old):
-            if _os.path.isdir(leftover):
-                _shutil.rmtree(leftover)
         if keep.isEmpty():
-            if _os.path.isdir(final):
-                _shutil.rmtree(final)  # partition fully retracted
-            continue
-        keep.write.mode("overwrite").parquet(stage)
-        if _os.path.isdir(final):
-            _os.rename(final, old)   # retire (restorable by recover)
-            _os.rename(stage, final)  # promote
-            _shutil.rmtree(old)
+            _shutil.rmtree(final, ignore_errors=True)  # fully retracted
         else:
-            _os.rename(stage, final)
+            rewrite_dir(final, keep)
     spark.catalog.refreshByPath(data_dir)  # renames bypass the listing cache
 
 
@@ -1591,13 +1560,17 @@ def incremental_semantic_dedup_apply(
     import json as _json
     import os as _os
 
-    from wing_binlog_go_spark.streaming.maintenance import write_json
+    from wing_binlog_go_spark.streaming.maintenance import (
+        recover_source_partition_swaps,
+        write_json,
+    )
 
     # heal a semantic_corpus_delete interrupted mid-partition-swap
-    # before probing ids (a retired-but-never-promoted cluster would
-    # otherwise read as absent and its ids would re-append as fresh)
+    # before probing ids (a cluster lost between the swap's renames
+    # would otherwise read as absent and its ids would re-append as
+    # fresh)
     if _os.path.isdir(_os.path.join(store_dir, "vectors")):
-        _recover_partition_swaps(_os.path.join(store_dir, "vectors"))
+        recover_source_partition_swaps(_os.path.join(store_dir, "vectors"))
         spark.catalog.refreshByPath(_os.path.join(store_dir, "vectors"))
 
     # in-batch id dedup (see incremental_dedup_apply in operators.dedup):
@@ -1716,9 +1689,9 @@ def semantic_corpus_delete(
     delete path ``semantic_dedup_corpus_writer`` refuses online. The
     vector store is PARTITIONED BY ``_cluster``, so only the clusters
     that contain the ids are rewritten
-    (:func:`_rewrite_partitions_minus_ids` — stage/retire/promote with
-    the explicit restore; the frozen ``centroids.json`` is untouched).
-    Idempotent; crash-healable via :func:`_recover_partition_swaps`,
+    (:func:`_rewrite_partitions_minus_ids` — one ``rewrite_dir`` per
+    cluster; the frozen ``centroids.json`` is untouched). Idempotent;
+    crash-healable via ``maintenance.recover_source_partition_swaps``,
     which the next stream increment also runs.
 
     Semantics honesty: removing a survivor does NOT resurrect the
@@ -1730,8 +1703,12 @@ def semantic_corpus_delete(
     Returns {"deleted_ids": n, "clusters_rewritten": [...]}."""
     import os as _os
 
+    from wing_binlog_go_spark.streaming.maintenance import (
+        recover_source_partition_swaps,
+    )
+
     vec_dir = _os.path.join(store_dir, "vectors")
-    _recover_partition_swaps(vec_dir)
+    recover_source_partition_swaps(vec_dir)
     if isinstance(ids, DataFrame):
         ids_df = ids.select(F.col(ids.columns[0]).alias(id_col))
     else:
@@ -2371,7 +2348,7 @@ def incremental_knn_graph_apply(
     Commit protocol: fresh vectors append FIRST (ids already present
     are replay no-ops); then every cluster NAMED BY THE BATCH — by a
     fresh or a replayed row — is rebuilt from vectors/ and swapped in
-    atomically (stage + ``os.rename``, the sketch-writer pattern).
+    with ``maintenance.rewrite_dir``.
     Rebuilding batch-named rather than fresh-named clusters is what
     heals the crash window between the vector append and the edge
     swap: the replayed batch re-names the same clusters and the
@@ -2445,6 +2422,8 @@ def _rebuild_knn_clusters(
     import os as _os
     import shutil as _shutil
 
+    from wing_binlog_go_spark.streaming.maintenance import rewrite_dir
+
     corpus = (
         spark.read.parquet(vec_dir)
         .filter(F.col("cluster").isin(touched))
@@ -2477,32 +2456,15 @@ def _rebuild_knn_clusters(
         r.cluster for r in corpus.select("cluster").distinct().collect()
     }
     for c in touched:
-        stage = _os.path.join(edge_dir, "_staging", f"cluster={c}")
-        # the retired copy ALSO lives under _staging: a crash mid-swap
-        # must never leave a non-partition directory (cluster=N.old)
-        # next to live partitions, where Spark's partition discovery
-        # would misparse it
-        old = _os.path.join(edge_dir, "_staging", f"cluster={c}.old")
         final = _os.path.join(edge_dir, f"cluster={c}")
-        for leftover in (stage, old):
-            if _os.path.isdir(leftover):
-                _shutil.rmtree(leftover)  # crashed earlier attempt
         if c not in nonempty:
-            if _os.path.isdir(final):
-                _shutil.rmtree(final)  # cluster fully retracted
-            continue
-        part = edges.filter(F.col("cluster") == c).drop("cluster")
-        part.write.mode("overwrite").parquet(stage)
-        _os.makedirs(edge_dir, exist_ok=True)
-        if _os.path.isdir(final):
-            # swap: retire the old partition, promote the staged one;
-            # a crash between the renames leaves final absent and is
-            # healed by the batch-named rebuild on replay
-            _os.rename(final, old)
-            _os.rename(stage, final)
-            _shutil.rmtree(old)
+            _shutil.rmtree(final, ignore_errors=True)  # fully retracted
         else:
-            _os.rename(stage, final)
+            # a crash between the swap's renames leaves final absent
+            # and is healed by the batch-named rebuild on replay
+            rewrite_dir(
+                final, edges.filter(F.col("cluster") == c).drop("cluster")
+            )
     if _os.path.isdir(edge_dir):
         # partition swaps bypass Spark's file-listing cache
         spark.catalog.refreshByPath(edge_dir)

@@ -722,15 +722,22 @@ def misra_gries_topk(
     counters (the documented Python boundary — MG is inherently a
     sequential counter algorithm), emitting ≤ k rows per partition;
     the merge is a tiny groupBy over ≤ partitions·k rows.
+
+    The pass reads exact Python values (``mapInArrow`` +
+    ``to_pylist``): through pandas a nullable bigint column arrives as
+    float64, which rounds large ids into each other, and NULL is a
+    single item rather than one NaN per row.
     """
-    import pandas as pd
+    import pyarrow as pa
 
     schema = f"item {dict(items.dtypes)[item_col]}, est long"
 
     def mg_partition(batches):
         counters: dict = {}
-        for pdf in batches:
-            for it in pdf[item_col]:
+        item_type = None
+        for batch in batches:
+            item_type = batch.column(0).type
+            for it in batch.column(0).to_pylist():
                 if it in counters:
                     counters[it] += 1
                 elif len(counters) < k:
@@ -744,11 +751,16 @@ def misra_gries_topk(
                             dead.append(key)
                     for key in dead:
                         del counters[key]
-        yield pd.DataFrame(
-            {"item": list(counters), "est": list(counters.values())}
-        )
+        if counters:
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(list(counters), type=item_type),
+                    pa.array(list(counters.values()), type=pa.int64()),
+                ],
+                names=["item", "est"],
+            )
 
-    partials = items.select(item_col).mapInPandas(mg_partition, schema)
+    partials = items.select(item_col).mapInArrow(mg_partition, schema)
     return partials.groupBy("item").agg(F.sum("est").alias("est"))
 
 

@@ -1,19 +1,29 @@
 """The on-disk commit protocol, and the table maintenance jobs built on it.
 
 Every in-place rewrite in the engine — replicas, SCD2 history, aggregate
-and join-view state, dedup, ANN and search stores — commits through the
-three primitives here; no other module swaps directories, fsyncs or
-renames files over each other:
+and join-view state, dedup, ANN and search stores, every per-batch
+partition a sink publishes — commits through the three primitives here;
+no other module swaps directories, fsyncs or renames files over each
+other:
 
 - :func:`rewrite_dir` — single-directory staged rewrite: write the new
   table to the hidden :func:`staging_path` sibling (plus optional meta
   JSON, fsynced inside the stage), then :func:`swap_dir` it into place.
+  A per-batch partition (``bkey=K``, ``batch_id=K``) is published with
+  it, and so is each partition a store swaps (IVF-PQ lists, semantic
+  clusters, kNN edge clusters).
 - :func:`write_json` — durable JSON write: tmp file, fsync, atomic
   ``os.replace``.
 - :func:`rewrite_buckets` — multi-bucket manifest commit for the
   ``bucket=N`` layouts: stage every changed bucket, commit a manifest
   naming them, swap each in; rolled forward by
   :func:`recover_bucket_commit` after a crash.
+
+Recovery and the replay probe sit beside them: :func:`recover_swap`
+restores one directory lost between :func:`swap_dir`'s renames,
+:func:`recover_partition_swaps` does so for every ``X=v`` partition of
+a table, and :func:`batch_committed` is the replay probe of a per-batch
+partition that :func:`rewrite_dir` published.
 
 The maintenance jobs (compaction, z-order, sketch-store compaction) are
 ordinary callers of the same primitives. Streaming parquet sinks append
@@ -156,25 +166,60 @@ def recover_swap(path: str) -> None:
         shutil.rmtree(legacy, ignore_errors=True)
 
 
-def recover_bucket_swaps(target_dir: str) -> None:
-    """Restore any bucket dir lost mid-swap: a crash between swap_dir's
-    two renames leaves only the HIDDEN backup, which hive partition
-    discovery (correctly) skips — so without this probe the bucket's
-    rows silently vanish from every read, and nothing ever retries the
-    swap of a dir that no longer appears in os.listdir. Probes both the
-    dot-prefixed and legacy backup names."""
+def recover_partition_swaps(target_dir: str) -> None:
+    """Restore any ``X=v`` partition dir lost mid-swap: a crash between
+    swap_dir's two renames leaves only the HIDDEN backup, which hive
+    partition discovery (correctly) skips — so without this probe the
+    partition's rows silently vanish from every read, and nothing ever
+    retries the swap of a dir that no longer appears in os.listdir.
+    Serves the ``bucket=N`` tables and the partitioned source-data
+    stores alike. Probes both the dot-prefixed and legacy backup
+    names."""
     try:
         entries = os.listdir(target_dir)
     except FileNotFoundError:
         return
     for entry in entries:
-        name = None
-        if entry.startswith(".bucket=") and entry.endswith("._old"):
-            name = entry[1:-len("._old")]
-        elif entry.startswith("bucket=") and entry.endswith("._old"):
-            name = entry[: -len("._old")]
-        if name:
+        if "=" in entry and entry.endswith("._old"):
+            name = entry.removeprefix(".").removesuffix("._old")
             recover_swap(os.path.join(target_dir, name))
+
+
+def recover_source_partition_swaps(data_dir: str) -> None:
+    """:func:`recover_partition_swaps` for the stores whose partitions
+    are SOURCE data (IVF-PQ ``codes/``, semantic ``vectors/``): a lost
+    partition is not rebuildable, so it must be restored.
+
+    For one release this also restores a crash left by those stores'
+    swap before :func:`rewrite_dir` (the ``_legacy_backup_path``
+    counterpart): it retired a live partition to ``_staging/<part>.old``
+    and staged the new one at ``_staging/<part>``. A retired copy whose
+    live partition is absent is restored; the rest of ``_staging`` is
+    debris. Sketch stores must not use this: their ``_staging/bkey=*.old``
+    dirs belong to :func:`compact_sketch_store`, and restoring one would
+    double-count."""
+    recover_partition_swaps(data_dir)
+    staging = os.path.join(data_dir, "_staging")
+    if not os.path.isdir(staging):
+        return
+    for entry in os.listdir(staging):
+        path = os.path.join(staging, entry)
+        final = os.path.join(data_dir, entry.removesuffix(".old"))
+        if entry.endswith(".old") and not os.path.isdir(final):
+            os.rename(path, final)
+        else:
+            shutil.rmtree(path)
+
+
+def batch_committed(part_dir: str) -> bool:
+    """The replay probe of a per-batch partition published by
+    :func:`rewrite_dir`: committed iff the dir holds parquet. The
+    partition appears in one rename with its files, so a parquet-less
+    dir can only be debris (a crash of a writer that predates the
+    staged publish), which the next :func:`rewrite_dir` replaces."""
+    return os.path.isdir(part_dir) and any(
+        f.endswith(".parquet") for f in os.listdir(part_dir)
+    )
 
 
 def _bucket_manifest_path(target_dir: str) -> str:
@@ -289,7 +334,7 @@ def rewrite_buckets(
     recover_bucket_commit(target_dir)
     _discard_stale_staging(target_dir)
     if buckets is None:
-        recover_bucket_swaps(target_dir)
+        recover_partition_swaps(target_dir)
         buckets = sorted(
             int(e.split("=", 1)[1])
             for e in os.listdir(target_dir)
@@ -387,7 +432,7 @@ def compact_bucketed_table(
     Returns {bucket dir name: new file count}.
     """
     recover_bucket_commit(target_dir)
-    recover_bucket_swaps(target_dir)  # heal any bucket lost mid-swap
+    recover_partition_swaps(target_dir)  # heal any bucket lost mid-swap
     out: dict[str, int] = {}
     with _commit_lock(target_dir):
         for d in sorted(os.listdir(target_dir)):
@@ -486,10 +531,11 @@ def _sketch_compaction_plan_path(store_dir: str) -> str:
 
 def _recover_sketch_compaction(store_dir: str) -> bool:
     """Heal an interrupted ``compact_sketch_store`` run — the
-    multi-partition sibling of ``_recover_partition_swaps``, which
-    cannot be reused verbatim because N retired partitions promote into
-    ONE merged partition: restoring every ``.old`` whose live dir is
-    missing would double-count the absorbed batches after the promote.
+    multi-partition sibling of :func:`recover_source_partition_swaps`,
+    which cannot be reused verbatim because N retired partitions
+    promote into ONE merged partition: restoring every ``.old`` whose
+    live dir is missing would double-count the absorbed batches after
+    the promote.
 
     The plan file (``_staging/compacted.plan.json``, committed via
     :func:`write_json` only AFTER the staged merge finished writing)

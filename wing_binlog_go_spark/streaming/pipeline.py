@@ -49,7 +49,7 @@ from wing_binlog_go_spark.streaming.maintenance import (  # noqa: F401
     _bucket_manifest_path,  # re-exported at its historical import path
     _commit_lock,  # re-exported at its historical import path
     recover_bucket_commit,
-    recover_bucket_swaps,
+    recover_partition_swaps,
     recover_swap,
     rewrite_buckets,
     rewrite_dir,
@@ -201,7 +201,8 @@ def run_pipeline(
     letting them corrupt envelopes: rows missing their binlog
     coordinates or carrying an unknown action (including the all-NULL
     rows Spark's PERMISSIVE JSON mode produces for unparseable lines)
-    are appended there as parquet tagged with the batch id, and only
+    are written there as parquet, one ``batch_id=K`` partition per
+    batch published through ``maintenance.rewrite_dir``, and only
     valid rows continue into shaping. The reference logs-and-drops bad
     input (handler.go error paths); a dead-letter table is the
     no-silent-caps version — every excluded record is queryable.
@@ -261,12 +262,13 @@ def run_pipeline(
             if dead_letter_dir is not None:
                 bad = batch_df.filter(~F.coalesce(_valid, F.lit(False)))
                 if not bad.isEmpty():
-                    # per-batch partition dir, overwritten in place: a
-                    # replayed batch rewrites the same records instead
-                    # of appending duplicates (idempotent like every
-                    # other sink here)
-                    bad.write.mode("overwrite").parquet(
-                        os.path.join(dead_letter_dir, f"batch_id={batch_id}")
+                    # per-batch partition dir, rewritten whole: a
+                    # replayed batch replaces the same records instead
+                    # of appending duplicates, and a crash mid-write
+                    # leaves the previous copy readable
+                    rewrite_dir(
+                        os.path.join(dead_letter_dir, f"batch_id={batch_id}"),
+                        bad,
                     )
                 shaped = batch_df.filter(F.coalesce(_valid, F.lit(False)))
             # size the index build's range shuffle to the BATCH, not the
@@ -705,7 +707,7 @@ def read_bucketed_table(spark: SparkSession, target_dir: str) -> DataFrame:
     (only its hidden backup on disk — invisible to partition discovery)
     is restored so its rows cannot silently vanish from the read."""
     recover_bucket_commit(target_dir)
-    recover_bucket_swaps(target_dir)
+    recover_partition_swaps(target_dir)
     return spark.read.parquet(target_dir).drop("bucket")
 
 

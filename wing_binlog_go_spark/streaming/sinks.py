@@ -12,27 +12,33 @@ Reference → Spark mapping:
 - HTTP webhook groups, per-node queue + worker pool
   (src/services/http/*) → http_route_writer via foreachPartition,
   import-gated; group routing is the Route filter.
-- TCP pub/sub push (src/services/subscribe/*) → no Spark analog for
-  push-TCP; the Route abstraction + Kafka topics replace it (documented
-  non-goal, SURVEY §7).
+- TCP pub/sub push (src/services/subscribe/*) → the driver-side
+  gateway in streaming.subscribe, fed by its subscribe_route_writer.
 
 Every writer serializes with envelope_json (reference wire shape) and is
 idempotent-friendly: payloads carry event_index so consumers dedupe
-replays (O19).
+replays (O19). The writers keyed by batch (the sketch stores, drift
+and curation stats) publish each batch partition with
+maintenance.rewrite_dir and skip a replayed batch on
+maintenance.batch_committed.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import shutil
 from typing import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from wing_binlog_go_spark.functions.envelope import envelope_json
-from wing_binlog_go_spark.streaming.maintenance import write_json
+from wing_binlog_go_spark.streaming.maintenance import (
+    absorbed_batch_keys,
+    batch_committed,
+    rewrite_dir,
+    write_json,
+)
 from wing_binlog_go_spark.streaming.pipeline import (
     _run_concurrently,
     after_earlier_routes,
@@ -823,6 +829,17 @@ def read_pit_enriched(spark, out_dir: str) -> DataFrame:
     return spark.read.parquet(out_dir).dropDuplicates(["event_index"])
 
 
+def _require_posix(store_dir: str, op_name: str) -> None:
+    """The loud guard of every writer whose batch-commit probe and
+    publish are os-level: on an object store a URI would silently
+    disable replay detection and duplicate rows."""
+    if "://" in store_dir:
+        raise ValueError(
+            f"{op_name}: the store dir must be a POSIX path "
+            f"(got {store_dir!r}) — the batch-commit probe is os-level"
+        )
+
+
 def curation_stats_writer(
     stats_dir: str,
     table: str,
@@ -837,18 +854,21 @@ def curation_stats_writer(
     going bad shows up as a rule-level failure spike batches before it
     shows up in corpus size).
 
-    One row per micro-batch appended to ``stats_dir`` PARTITIONED BY
-    batch_id: the partition directory's presence (with data files) is
-    the commit marker, so at-least-once replays of a batch are no-ops
-    (same idempotence shape as the corpus stores' id-presence).  Cost
+    One row per micro-batch in ``stats_dir`` PARTITIONED BY batch_id:
+    each ``batch_id=K`` partition is published whole by
+    ``maintenance.rewrite_dir``, so its presence with data files
+    (``maintenance.batch_committed``) is the commit marker and
+    at-least-once replays of a batch are no-ops, while a crash
+    mid-write leaves nothing that reads as committed. Cost
     per batch: the flags are row-local column expressions (zero
     shuffle) and every count folds into ONE single-row aggregate — one
     driver action plus the 1-row write.
 
-    ``stats_dir`` must be a POSIX path (same constraint, same reason,
-    and same loud guard as the incremental-aggregate state store: the
-    commit check is an os-level directory probe; on an object store a
-    URI would silently disable replay detection and duplicate rows).
+    ``stats_dir`` must be a POSIX path (the storage constraint of the
+    incremental-aggregate state store too), and a URI is refused
+    loudly: the commit check is an os-level directory probe; on an
+    object store it would silently disable replay detection and
+    duplicate rows.
 
     ``flags_fn`` defaults to ``gopher_quality_flags(..., with_rules=
     True)``; any replacement must emit a boolean ``keep`` plus
@@ -862,18 +882,11 @@ def curation_stats_writer(
     """
     from wing_binlog_go_spark.functions.text import gopher_quality_flags
 
-    if "://" in stats_dir:
-        raise ValueError(
-            "curation_stats_writer: stats_dir must be a POSIX path "
-            f"(got {stats_dir!r}) — the batch-commit probe is os-level; "
-            "a URI would silently disable replay detection"
-        )
+    _require_posix(stats_dir, "curation_stats_writer")
 
     def write(env: DataFrame, batch_id: int) -> None:
         part_dir = os.path.join(stats_dir, f"batch_id={batch_id}")
-        if os.path.isdir(part_dir) and any(
-            f.endswith(".parquet") for f in os.listdir(part_dir)
-        ):
+        if batch_committed(part_dir):
             return  # replayed batch: stats row already committed
         docs = _insert_docs(env, table, id_field, text_field)
         flagged = (
@@ -894,13 +907,11 @@ def curation_stats_writer(
                 F.sum((~F.col(c)).cast("long")).alias(c.replace("pass_", "fail_"))
                 for c in rule_cols
             ],
-        ).withColumn("batch_id", F.lit(int(batch_id)))
+        )
         # empty batches still write their row (n_docs=0): a silent gap
         # in the stats table would be indistinguishable from a stalled
         # route, and the no-silent-caps rule applies to monitoring too
-        stats.fillna(0).write.mode("append").partitionBy("batch_id").parquet(
-            stats_dir
-        )
+        rewrite_dir(part_dir, stats.fillna(0))
 
     return write
 
@@ -1070,44 +1081,48 @@ def read_novelty_stats(spark, store_dir: str) -> DataFrame:
 
 
 
-def _sketch_batch_committed(store_dir: str, part_dir: str, batch_key) -> bool:
-    """The sketch-store replay probe: a batch is committed if its
-    partition exists WITH parquet (rename-committed dirs always hold
-    files; bare dirs are pre-rename crash debris) OR its bkey was
-    absorbed by a past ``compact_sketch_store`` run (the partition is
-    gone, but re-sketching would double-count the additive merges —
-    the manifest is written before any partition moves, so this OR is
-    crash-safe across the whole compaction window)."""
-    from wing_binlog_go_spark.streaming.maintenance import absorbed_batch_keys
+def _sketch_route(
+    store_dir: str,
+    table: str,
+    op_name: str,
+    usable: Callable,
+    id_field: str,
+    field: str,
+    build: Callable[[DataFrame], DataFrame],
+) -> Callable[[DataFrame, int], None]:
+    """The route body of the mergeable-sketch store family (cms, mg,
+    kmv, qdigest). The insert-only probe also yields the batch key, the
+    batch's minimum doc id (stable under at-least-once replay). A batch
+    whose ``bkey=`` partition is committed (``batch_committed``) or was
+    absorbed by ``compact_sketch_store`` is a replay no-op: the
+    manifest is written before any partition moves, so this OR is
+    crash-safe across the whole compaction window. Otherwise ``build``
+    sketches the batch's ``_insert_docs`` frame (doc_id, text) and
+    ``rewrite_dir`` publishes the partition in one rename with its
+    files, so a crash mid-write leaves nothing that reads as committed
+    and the replay re-sketches the batch instead of skipping it."""
+    _require_posix(store_dir, op_name)
 
-    if os.path.isdir(part_dir) and any(
-        f.endswith(".parquet") for f in os.listdir(part_dir)
-    ):
-        return True
-    return batch_key in absorbed_batch_keys(store_dir)
+    def write(env: DataFrame, batch_id: int) -> None:
+        n, batch_key = _insert_only_probe(
+            env, table, op_name, usable(),
+            key_expr=F.element_at("event.data", id_field).cast("long"),
+        )
+        if not n:
+            return
+        part_dir = os.path.join(store_dir, f"bkey={batch_key}")
+        if batch_committed(part_dir) or batch_key in absorbed_batch_keys(
+            store_dir
+        ):
+            return  # replayed batch: already committed or absorbed
+        rewrite_dir(part_dir, build(_insert_docs(env, table, id_field, field)))
+
+    return write
 
 
-def _publish_batch_partition(
-    df: DataFrame, store_dir: str, part_dir: str, batch_key
-) -> None:
-    """Stage-then-rename commit of one sketch batch partition: the
-    multi-file parquet job is not atomic, so it writes to
-    ``store_dir/_staging/bkey=<key>`` (invisible to Spark reads —
-    leading underscore) and the directory rename to ``part_dir`` is the
-    commit point. A crash mid-write therefore leaves NO ``bkey=``
-    directory (else the replay probe would skip the batch and the
-    sketch would permanently undercount), only staging debris that the
-    retry discards. The bkey partition value comes from the directory
-    name after the rename."""
-    stage_dir = os.path.join(store_dir, "_staging", f"bkey={batch_key}")
-    shutil.rmtree(stage_dir, ignore_errors=True)  # crashed earlier attempt
-    df.write.mode("overwrite").parquet(stage_dir)
-    os.makedirs(os.path.dirname(part_dir), exist_ok=True)
-    if os.path.isdir(part_dir):
-        # parquet-less debris (the pre-rename writer's crash window) —
-        # clear it or the commit rename gets ENOTEMPTY
-        shutil.rmtree(part_dir)
-    os.rename(stage_dir, part_dir)
+def _tokens(docs: DataFrame) -> DataFrame:
+    """One ``tok`` row per lower-cased, space-split token of the text."""
+    return docs.select(F.explode(F.split(F.lower("text"), " ")).alias("tok"))
 
 
 def cms_sketch_writer(
@@ -1122,48 +1137,22 @@ def cms_sketch_writer(
     stream (`operators.stats.cms_build`): each micro-batch's INSERT
     docs tokenize and sketch into a PARTITION keyed by the batch's
     minimum doc id (an at-least-once-stable batch key). The partition
-    appears ATOMICALLY (``_publish_batch_partition``), so directory
-    presence is a sound commit marker and a replayed batch is a no-op
-    instead of a double-count, which matters precisely because sketches
-    merge by ADDITION. Read the merged sketch back with
-    ``read_cms_sketch`` (cell-wise sum across partitions — the
-    mergeability doing the work).
+    appears ATOMICALLY (``_sketch_route``), so directory presence is a
+    sound commit marker and a replayed batch is a no-op instead of a
+    double-count, which matters precisely because sketches merge by
+    ADDITION. Read the merged sketch back with ``read_cms_sketch``
+    (cell-wise sum across partitions — the mergeability doing the
+    work).
 
     INSERT-ONLY, enforced loudly: a retraction raises — a sketch can
     never subtract a deleted doc's tokens."""
     from wing_binlog_go_spark.operators.stats import cms_build
 
-    if "://" in store_dir:
-        raise ValueError(
-            "cms_sketch_writer: store_dir must be a POSIX path "
-            f"(got {store_dir!r}) — the batch-commit probe is os-level"
-        )
-
-    def write(env: DataFrame, batch_id: int) -> None:
-        n, batch_key = _insert_only_probe(
-            env, table, "cms_sketch_writer",
-            _docs_usable(id_field, item_field),
-            key_expr=F.element_at("event.data", id_field).cast("long"),
-        )
-        if not n:
-            return
-        docs = _insert_docs(env, table, id_field, item_field).withColumnRenamed(
-            "text", "_payload"
-        )
-        part_dir = os.path.join(store_dir, f"bkey={batch_key}")
-        # committed = partition-with-parquet OR absorbed-by-compaction
-        # (see _sketch_batch_committed; the parquet check exists for
-        # stores created by the PRE-rename append-mode writer, where a
-        # crash could leave a bare bkey= directory)
-        if _sketch_batch_committed(store_dir, part_dir, batch_key):
-            return  # replayed batch: already committed or absorbed
-        toks = docs.select(
-            F.explode(F.split(F.lower("_payload"), " ")).alias("tok")
-        )
-        sketch = cms_build(toks, "tok", width=width, depth=depth)
-        _publish_batch_partition(sketch, store_dir, part_dir, batch_key)
-
-    return write
+    return _sketch_route(
+        store_dir, table, "cms_sketch_writer",
+        lambda: _docs_usable(id_field, item_field), id_field, item_field,
+        lambda docs: cms_build(_tokens(docs), "tok", width=width, depth=depth),
+    )
 
 
 def read_cms_sketch(spark, store_dir: str) -> DataFrame:
@@ -1186,46 +1175,23 @@ def mg_sketch_writer(
     """Route writer maintaining a Misra-Gries heavy-hitter summary from
     the CDC stream (`operators.stats.misra_gries_topk`): per batch the
     token summary lands in a partition keyed by the batch's min doc id,
-    committed by staging + atomic ``os.rename`` so partition-presence
-    is a sound replay probe (the same commit shape as
-    ``cms_sketch_writer`` — MG merges by summing partial estimates,
-    so a replayed batch must not re-merge and a crashed half-written
-    batch must not be skipped). ``read_mg_sketch`` returns
-    the merged (item, est) table; the mergeable-summary theorem keeps
-    the N/(k+1) undercount bound through the per-batch merge.
+    published atomically so partition-presence is a sound replay probe
+    (the same commit shape as ``cms_sketch_writer`` — MG merges by
+    summing partial estimates, so a replayed batch must not re-merge
+    and a crashed half-written batch must not be skipped).
+    ``read_mg_sketch`` returns the merged (item, est) table; the
+    mergeable-summary theorem keeps the N/(k+1) undercount bound
+    through the per-batch merge.
 
     INSERT-ONLY, enforced loudly — same contract and reason as
     ``cms_sketch_writer``."""
     from wing_binlog_go_spark.operators.stats import misra_gries_topk
 
-    if "://" in store_dir:
-        raise ValueError(
-            "mg_sketch_writer: store_dir must be a POSIX path "
-            f"(got {store_dir!r}) — the batch-commit probe is os-level"
-        )
-
-    def write(env: DataFrame, batch_id: int) -> None:
-        n, batch_key = _insert_only_probe(
-            env, table, "mg_sketch_writer",
-            _docs_usable(id_field, item_field),
-            key_expr=F.element_at("event.data", id_field).cast("long"),
-        )
-        if not n:
-            return
-        docs = _insert_docs(env, table, id_field, item_field).withColumnRenamed(
-            "text", "_payload"
-        )
-        part_dir = os.path.join(store_dir, f"bkey={batch_key}")
-        # partition-with-parquet OR absorbed — see _sketch_batch_committed
-        if _sketch_batch_committed(store_dir, part_dir, batch_key):
-            return  # replayed batch: already committed or absorbed
-        toks = docs.select(
-            F.explode(F.split(F.lower("_payload"), " ")).alias("tok")
-        )
-        summary = misra_gries_topk(toks, "tok", k=k)
-        _publish_batch_partition(summary, store_dir, part_dir, batch_key)
-
-    return write
+    return _sketch_route(
+        store_dir, table, "mg_sketch_writer",
+        lambda: _docs_usable(id_field, item_field), id_field, item_field,
+        lambda docs: misra_gries_topk(_tokens(docs), "tok", k=k),
+    )
 
 
 def read_mg_sketch(spark, store_dir: str) -> DataFrame:
@@ -1251,9 +1217,9 @@ def kmv_sketch_writer(
     seen" estimator, third member of the mergeable-sketch store family
     (CMS counts frequencies, MG names the heavy items, KMV sizes the
     key space). Per batch the k smallest distinct mixed hashes land in
-    a partition keyed by the batch's min doc id, committed by staging +
-    atomic ``os.rename`` — the identical commit shape and replay probe
-    as ``cms_sketch_writer``, and for the same reason read through the
+    a partition keyed by the batch's min doc id, published atomically —
+    the identical commit shape and replay probe as
+    ``cms_sketch_writer``, and for the same reason read through the
     merge: bottom-k over a union equals bottom-k of the parts'
     bottom-k's (closure under union IS the mergeability), so
     ``read_kmv_sketch`` just re-sketches the concatenated partitions —
@@ -1268,33 +1234,11 @@ def kmv_sketch_writer(
     statistic cannot un-see a deleted key's hash."""
     from wing_binlog_go_spark.operators.stats import kmv_bottom_k, kmv_hash
 
-    if "://" in store_dir:
-        raise ValueError(
-            "kmv_sketch_writer: store_dir must be a POSIX path "
-            f"(got {store_dir!r}) — the batch-commit probe is os-level"
-        )
-
-    def write(env: DataFrame, batch_id: int) -> None:
-        n, batch_key = _insert_only_probe(
-            env, table, "kmv_sketch_writer",
-            _docs_usable(id_field, key_field),
-            key_expr=F.element_at("event.data", id_field).cast("long"),
-        )
-        if not n:
-            return
-        docs = _insert_docs(env, table, id_field, key_field).withColumnRenamed(
-            "text", "_key"
-        )
-        part_dir = os.path.join(store_dir, f"bkey={batch_key}")
-        # partition-with-parquet OR absorbed — see _sketch_batch_committed
-        if _sketch_batch_committed(store_dir, part_dir, batch_key):
-            return  # replayed batch: already committed or absorbed
-        sketch = kmv_bottom_k(
-            docs.select(kmv_hash("_key").alias("h")), k
-        )
-        _publish_batch_partition(sketch, store_dir, part_dir, batch_key)
-
-    return write
+    return _sketch_route(
+        store_dir, table, "kmv_sketch_writer",
+        lambda: _docs_usable(id_field, key_field), id_field, key_field,
+        lambda docs: kmv_bottom_k(docs.select(kmv_hash("text").alias("h")), k),
+    )
 
 
 def read_kmv_sketch(spark, store_dir: str, k: int = 256) -> DataFrame:
@@ -1321,8 +1265,8 @@ def qdigest_sketch_writer(
     cardinality, Q-digest QUANTILES): "what is the p99 of this column
     over everything the table has ever seen" without keeping the rows.
     Per batch the batch's digest lands in a partition keyed by the
-    batch's min doc id under the family's staging + atomic-rename
-    commit and parquet-presence replay probe. ``read_qdigest_sketch``
+    batch's min doc id under the family's atomic publish and
+    parquet-presence replay probe. ``read_qdigest_sketch``
     merges by the sketch's own closure: union the partitions' count
     tables node-wise and recompress — the result is the digest of the
     concatenated batches (order-free, so replay ORDER can't change it
@@ -1342,40 +1286,24 @@ def qdigest_sketch_writer(
     sketched rows all agree on which rows are usable."""
     from wing_binlog_go_spark.operators.stats import qdigest_build
 
-    if "://" in store_dir:
-        raise ValueError(
-            "qdigest_sketch_writer: store_dir must be a POSIX path "
-            f"(got {store_dir!r}) — the batch-commit probe is os-level"
-        )
-
-    def _value_usable():
+    def usable():
         return (
             F.element_at("event.data", id_field).cast("long").isNotNull()
             & F.element_at("event.data", value_field).cast("long").isNotNull()
         )
 
-    def write(env: DataFrame, batch_id: int) -> None:
-        n, batch_key = _insert_only_probe(
-            env, table, "qdigest_sketch_writer", _value_usable(),
-            key_expr=F.element_at("event.data", id_field).cast("long"),
-        )
-        if not n:
-            return
-        docs = (
-            _insert_docs(env, table, id_field, value_field)
-            .select("doc_id", F.col("text").cast("long").alias("_value"))
-            .filter(F.col("_value").isNotNull())
-        )
-        part_dir = os.path.join(store_dir, f"bkey={batch_key}")
-        # partition-with-parquet OR absorbed — see _sketch_batch_committed
-        if _sketch_batch_committed(store_dir, part_dir, batch_key):
-            return  # replayed batch: already committed or absorbed
-        sketch = qdigest_build(docs, "_value", bits=bits, k=k).select(
+    def build(docs: DataFrame) -> DataFrame:
+        values = docs.select(
+            "doc_id", F.col("text").cast("long").alias("_value")
+        ).filter(F.col("_value").isNotNull())
+        return qdigest_build(values, "_value", bits=bits, k=k).select(
             "id", "cnt"
         )
-        _publish_batch_partition(sketch, store_dir, part_dir, batch_key)
 
-    return write
+    return _sketch_route(
+        store_dir, table, "qdigest_sketch_writer", usable, id_field,
+        value_field, build,
+    )
 
 
 def drift_monitor_writer(
@@ -1403,19 +1331,15 @@ def drift_monitor_writer(
     construction and the binning stays a map-side expression; both
     distributions are Laplace-smoothed; the PSI sum folds a bin-ORDERED
     collected list (the q163 determinism contract). Commit: rows land
-    in a ``bkey=`` partition via staging + atomic rename, so replays
-    are no-ops (the sketch-family shape).
+    in a ``bkey=`` partition published by ``maintenance.rewrite_dir``,
+    so replays are no-ops (the sketch-family shape).
 
     Deliberately NOT under the store routes' loud insert-only probe —
     same reasoning as ``curation_stats_writer``: this route maintains
     per-batch ARRIVAL measurements, not a mirror; an UPDATE/DELETE is
     not an arrival and cannot diverge a measurement that never claimed
     to track current state."""
-    if "://" in store_dir:
-        raise ValueError(
-            "drift_monitor_writer: store_dir must be a POSIX path "
-            f"(got {store_dir!r}) — the batch-commit probe is os-level"
-        )
+    _require_posix(store_dir, "drift_monitor_writer")
     n_bins = cap // bin_width + 1
 
     def write(env: DataFrame, batch_id: int) -> None:
@@ -1449,9 +1373,7 @@ def drift_monitor_writer(
         if batch_key is None:
             return
         part_dir = os.path.join(store_dir, "psi", f"bkey={batch_key}")
-        if os.path.isdir(part_dir) and any(
-            f.endswith(".parquet") for f in os.listdir(part_dir)
-        ):
+        if batch_committed(part_dir):
             return  # replayed batch
 
         ref_path = os.path.join(store_dir, "reference.json")
@@ -1504,7 +1426,7 @@ def drift_monitor_writer(
                 ).alias("psi_r"),
             )
         )
-        _publish_batch_partition(psi, store_dir, part_dir, batch_key)
+        rewrite_dir(part_dir, psi)
 
     return write
 
